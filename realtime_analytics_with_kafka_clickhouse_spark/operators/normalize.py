@@ -55,22 +55,30 @@ def parse_wire_with_dlq(raw: DataFrame, value_col: str = "value") -> tuple[DataF
     retries — /root/reference/consumers/kafka_to_clickhouse.py:127-129; a
     corrupt record in an ingest engine must stay inspectable, not vanish).
 
-    Both sides derive from one projection, so in a streaming foreachBatch
-    the batch is scanned once (persist) and split by the corrupt test.
+    Each side is its own plan, and on the wire pipeline its own streaming
+    query: both scan the input, and each parses every line exactly once.
+    The accepted side parses inside a ``Generate`` over a one-element array
+    so the optimizer cannot push the corrupt-record filter below the parse
+    and inline ``from_json`` into both the filter and the projection (two
+    parses per line).  The quarantine side is a filter only; its repeated
+    ``from_json`` calls share one evaluation through Spark's subexpression
+    elimination.
     """
     corrupt = "_corrupt_record"
     schema = T.StructType(ORDER_WIRE_SCHEMA.fields + [T.StructField(corrupt, T.StringType())])
-    tagged = raw.withColumn(
-        "_parsed",
-        F.from_json(
-            F.col(value_col).cast("string"),
-            schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt},
-        ),
+    parse = F.from_json(
+        F.col(value_col).cast("string"),
+        schema,
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt},
     )
     is_corrupt = F.col(f"_parsed.{corrupt}").isNotNull() | F.col("_parsed").isNull()
-    parsed = tagged.filter(~is_corrupt).select("_parsed.*").drop(corrupt)
-    quarantined = tagged.filter(is_corrupt).select(
+    parsed = (
+        raw.select(F.explode(F.array(parse)).alias("_parsed"))
+        .filter(~is_corrupt)
+        .select("_parsed.*")
+        .drop(corrupt)
+    )
+    quarantined = raw.withColumn("_parsed", parse).filter(is_corrupt).select(
         F.col(value_col).cast("string").alias("raw_payload"),
         F.lit("json_parse_failed").alias("error"),
         F.current_timestamp().alias("_quarantined_at"),

@@ -3194,6 +3194,11 @@ def _centroid_dist2_micros(index: DataFrame, batch: DataFrame) -> int:
     )
     ci = {r["dim"]: r["c"] for r in rows if r["side"] == "i"}
     cb = {r["dim"]: r["c"] for r in rows if r["side"] == "b"}
+    if not ci or not cb or ci.keys() != cb.keys():
+        raise ValueError(
+            "centroid distance needs two non-empty sides with the same "
+            f"embedding dimensions (index has {len(ci)}, batch has {len(cb)})"
+        )
     d2 = 0.0
     for dim in sorted(ci):
         diff = ci[dim] - cb[dim]

@@ -30,6 +30,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.scalars import dsum, to_start_of_hour
 from ..sources.tables import load_table
@@ -69,6 +70,37 @@ def last_merged_batch(spark: SparkSession, rollup_dir: str) -> int | None:
     return int(text) if text else None
 
 
+def _rollup_fold(
+    spark: SparkSession,
+    rollup_dir: str,
+    batch_partials: DataFrame,
+    keys: list[str],
+    sums: list[tuple[str, str]],
+) -> DataFrame:
+    """The stored rollup (if any) re-summed with the batch partials.
+
+    The stored rollup is read with its known schema (the key types plus
+    bigint/double sums), so no footer-merge job runs to infer it.  Both
+    inputs are bounded by the number of keys, not by the batch's rows, so
+    the fold runs in one task: ``coalesce(1)`` puts the union in a single
+    partition, which already satisfies the re-aggregation's distribution —
+    no exchange, and the fold and its write share one stage.  The batch's
+    own partial aggregation (below the union) stays parallel."""
+    sum_types = {"long": T.LongType(), "money": T.DoubleType()}
+    unioned = batch_partials
+    if fs.exists(spark, rollup_dir):
+        key_types = {f.name: f.dataType for f in batch_partials.schema.fields}
+        stored_schema = T.StructType(
+            [T.StructField(k, key_types[k]) for k in keys]
+            + [T.StructField(c, sum_types[kind]) for c, kind in sums]
+        )
+        current = spark.read.schema(stored_schema).parquet(rollup_dir)
+        unioned = current.unionByName(batch_partials)
+    return unioned.coalesce(1).groupBy(*keys).agg(
+        *[(dsum(c) if kind == "money" else F.sum(c)).alias(c) for c, kind in sums]
+    )
+
+
 def merge_rollup(
     spark: SparkSession,
     rollup_dir: str,
@@ -86,6 +118,8 @@ def merge_rollup(
     ``keys``/``sums`` generalize over rollup shapes (the reference has TWO
     SummingMergeTree targets — hourly/category and daily/region); ``sums``
     maps column -> 'long'|'money' fold type.  Defaults = the A1 shape.
+    The fold runs in one task (see ``_rollup_fold``): the stored rollup and
+    the partials are bounded by the number of keys.
 
     Returns True if the batch was merged, False if skipped as a replay.
     """
@@ -103,17 +137,7 @@ def merge_rollup(
         seen = last_merged_batch(spark, rollup_dir)
         if seen is not None and batch_id <= seen:
             return False
-    if fs.exists(spark, rollup_dir):
-        current = spark.read.parquet(rollup_dir)
-        unioned = current.unionByName(batch_partials)
-    else:
-        unioned = batch_partials
-    merged = unioned.groupBy(*keys).agg(
-        *[
-            (dsum(c) if kind == "money" else F.sum(c)).alias(c)
-            for c, kind in sums
-        ]
-    )
+    merged = _rollup_fold(spark, rollup_dir, batch_partials, keys, sums)
     tmp = fs.swap_tmp_path(rollup_dir)
     merged.write.mode("overwrite").parquet(tmp)
     if batch_id is not None:
@@ -275,8 +299,9 @@ def compacted_rollup_txlog(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Stored-MV memo for accelerator reads: maintenance happens ONCE on the
 # write path (first call); dashboard reads then hit the stored table only —
 # that separation IS the accelerator semantics (a dashboard query does not
-# rebuild the MV it reads).
-_STORED_ROLLUP_MEMO: dict[str, str] = {}
+# rebuild the MV it reads).  Keyed on the events table's fingerprint too, so
+# a table rewritten at the same path rebuilds its rollup.
+_STORED_ROLLUP_MEMO: dict[tuple, str] = {}
 
 
 def hourly_trend_from_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -285,9 +310,10 @@ def hourly_trend_from_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     categories of the MERGE-maintained A1 state — never touching raw
     events at read time.  The oracle is the raw-events A8 aggregation, so
     the driver proves accelerator == base table every round."""
+    from ..operators._memo import table_fingerprint
     from ..storage import txlog
 
-    key = os.path.abspath(sf_dir)
+    key = (os.path.abspath(sf_dir), table_fingerprint(sf_dir, "events"))
     if key not in _STORED_ROLLUP_MEMO:
         _STORED_ROLLUP_MEMO[key] = _build_txlog_rollup(spark, sf_dir)
     stored = txlog.read_table(spark, _STORED_ROLLUP_MEMO[key])
@@ -303,21 +329,23 @@ def process_ingest_batch(
     batch_id: int,
     raw_dir: str,
     rollup_dir: str,
+    aggregate=hourly_rollup_aggregate,
 ) -> None:
     """One foreachBatch epoch, idempotent under replay:
 
     (a) the raw append targets ``raw_dir/ingest_epoch=<batch_id>`` with
         overwrite — a replayed epoch rewrites its own directory instead of
         appending duplicates (the epoch id doubles as a partition column);
-    (b) the rollup MERGE carries the batch id and is skipped if that id is
+    (b) the rollup partials (``aggregate``) are computed from that epoch
+        directory read back with the batch's schema — the batch is computed
+        once, by the raw write, with no columnar cache of all its columns;
+    (c) the rollup MERGE carries the batch id and is skipped if that id is
         already recorded in the rollup's marker (see ``merge_rollup``).
     """
-    batch_df.persist()
-    try:
-        batch_df.write.mode("overwrite").parquet(f"{raw_dir}/ingest_epoch={batch_id}")
-        merge_rollup(spark, rollup_dir, hourly_rollup_aggregate(batch_df), batch_id=batch_id)
-    finally:
-        batch_df.unpersist()
+    epoch_dir = f"{raw_dir}/ingest_epoch={batch_id}"
+    batch_df.write.mode("overwrite").parquet(epoch_dir)
+    stored = spark.read.schema(batch_df.schema).parquet(epoch_dir)
+    merge_rollup(spark, rollup_dir, aggregate(stored), batch_id=batch_id)
 
 
 def run_file_stream_pipeline(
@@ -386,6 +414,10 @@ def run_wire_stream_pipeline(
     splits into sinks with different semantics (stateful dedup on the main
     path; plain append on the DLQ).  File-stream source stands in for the
     Kafka reader (sources.kafka) with identical downstream logic.
+
+    Each main-query batch is handled by ``process_ingest_batch``: the raw
+    epoch write is the one pass over the parsed batch, and the rollup
+    partials are aggregated from that epoch directory read back.
     """
     from ..operators.normalize import normalize_orders, parse_wire_with_dlq
 
@@ -394,14 +426,9 @@ def run_wire_stream_pipeline(
     deduped = dedup_orders_stream(normalize_orders(ok))
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            batch_df.write.mode("overwrite").parquet(f"{raw_dir}/ingest_epoch={batch_id}")
-            merge_rollup(
-                spark, rollup_dir, orders_hourly_rollup_aggregate(batch_df), batch_id=batch_id
-            )
-        finally:
-            batch_df.unpersist()
+        process_ingest_batch(
+            spark, batch_df, batch_id, raw_dir, rollup_dir, orders_hourly_rollup_aggregate
+        )
 
     main_q = (
         deduped.writeStream.foreachBatch(handle_batch)

@@ -8,16 +8,25 @@ driver could do, so passing here implies passing there.
 
 from __future__ import annotations
 
+import atexit
 import datetime
 import math
+import shutil
+import tempfile
 
 import duckdb
 
 from realtime_analytics_with_kafka_clickhouse_spark.schemas import TESTDATA_TABLES
 
 
+# DuckDB spills to ``.tmp/`` under the cwd by default; keep its spill files
+# in a private temp dir that is removed when the process exits.
+_DUCK_TEMP = tempfile.mkdtemp(prefix="oracle_duckdb_")
+atexit.register(shutil.rmtree, _DUCK_TEMP, ignore_errors=True)
+
+
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    con = duckdb.connect(config={"temp_directory": _DUCK_TEMP})
     for t in TESTDATA_TABLES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"

@@ -131,6 +131,22 @@ def test_quantizer_refresh_assignment_is_map_side(spark):
     assert "MapInPandas" in plan, plan
 
 
+def test_centroid_distance_rejects_an_empty_side(spark):
+    """An empty batch has no centroid: the drift score raises a clear
+    ValueError instead of a KeyError from the per-dimension fold."""
+    from realtime_analytics_with_kafka_clickhouse_spark.operators.similarity import (
+        _centroid_dist2_micros,
+    )
+
+    index = spark.createDataFrame([([1.0, 2.0],), ([3.0, 4.0],)], "embedding array<float>")
+    empty = spark.createDataFrame([], "embedding array<float>")
+    assert _centroid_dist2_micros(index, index) == 0
+    with pytest.raises(ValueError, match=r"batch has 0\)"):
+        _centroid_dist2_micros(index, empty)
+    with pytest.raises(ValueError, match="index has 0,"):
+        _centroid_dist2_micros(empty, index)
+
+
 def test_dict_get_battery_branches_and_plan(spark, queries):
     """Dictionary battery invariants: both dictGetOrDefault branches fire
     (15 hits / 10 UNKNOWN — the partial dict covers regions 0-2 only),

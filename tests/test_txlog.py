@@ -4,6 +4,8 @@ the parquet-swap path approximates (SURVEY.md §2.7 delivery guarantees)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from realtime_analytics_with_kafka_clickhouse_spark.sources.tables import load_table
@@ -106,6 +108,28 @@ def test_hourly_trend_from_rollup_equals_raw_aggregation(spark):
     got = hourly_trend_from_rollup(spark, SF_DIR)
     want = hourly_trend(spark, SF_DIR)
     assert got.exceptAll(want).count() + want.exceptAll(got).count() == 0
+
+
+def test_hourly_trend_from_rollup_rebuilds_after_table_rewrite(spark, tmp_path):
+    """The stored-rollup memo is keyed on the events table's fingerprint:
+    after ``events.parquet`` is rewritten at the same path, the panel
+    serves the new table's trend, not the old rollup's."""
+    import pyarrow.parquet as pq
+
+    from realtime_analytics_with_kafka_clickhouse_spark.operators.rollups import hourly_trend
+    from realtime_analytics_with_kafka_clickhouse_spark.streaming.pipeline import (
+        hourly_trend_from_rollup,
+    )
+
+    table = pq.read_table(f"{SF_DIR}/events.parquet")
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    for rows in (table.slice(0, 600), table.slice(400)):
+        pq.write_table(rows, f"{sf}/events.parquet")
+        got = hourly_trend_from_rollup(spark, sf).collect()
+        want = hourly_trend(spark, sf).collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+        assert sum(r.order_count for r in got) == sum(r.order_count for r in want) > 0
 
 
 def test_append_tx_zone_map_prunes(spark, tmp_path):
