@@ -2017,11 +2017,16 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors touched at scan time (asymmetric: exact query side, coded
     corpus side).
 
-    All declarative: encoding and LUTs are array expressions over the
-    broadcast codebook (whole-stage codegen, zero UDFs); the scan is
-    codes ⨯ broadcast(query LUTs); ranking is round-6 subspace distances
-    summed EXACTLY (decimal(25,6) fold — order-independent in both
-    engines) with neighbor-id tiebreaks.  Scale: the shuffle carries
+    Encoding and LUTs share one ``mapInPandas`` numpy kernel
+    (``_pq_sub_d2_df``: per-dimension left-fold subspace distances, the
+    codebook a closure constant) with round-6 and argmin as Catalyst
+    expressions; the corpus codes are encoded once per embeddings
+    fingerprint (``_pq_codes_src``).  The scan is codes ⨯ broadcast(query
+    LUTs); each query's LUTs are exact int64 micros of the round-6
+    distances (``_pq_lut_micros_col``), so a pair's ADC distance is PQ_M
+    codegen ``element_at`` lookups summed in int64 — exact in any order,
+    in both engines — then divided by 1e6 (``_pq_adc_col``); ranking
+    breaks ties on neighbor id.  Scale: the shuffle carries
     only (query, neighbor, distance) triples past the per-query window;
     the corpus side streams codes (PQ_M small ints per vector).
     Codebooks are TRAINED (PQ_ITERS per-subspace Lloyd rounds, r8) —

@@ -253,28 +253,29 @@ def _make_sink_datasource_class():
             # keeping memory O(chunk) instead of O(partition).  Contract:
             # the only producer is the ledger stream source, whose rows
             # are non-null ints by construction — a null/bool/float would
-            # render as invalid JSON, so the first row of every partition
-            # is type-asserted to fail loudly if the producer changes.
+            # render as invalid JSON, so every row is type-checked and a
+            # bad one fails the task loudly, deleting the partial file.
             n = 0
-            with open(out, "w") as f:
-                chunk: list[str] = []
-                for row in iterator:
-                    if n == 0 and not all(
-                        type(v) is int for v in (row[0], row[1], row[2])
-                    ):
-                        raise TypeError(
-                            "graft_ledger_sink writes int64-only rows; got "
-                            f"{tuple(type(v).__name__ for v in (row[0], row[1], row[2]))}"
-                        )
-                    chunk.append(
-                        f'{{"id": {row[0]}, "bucket": {row[1]}, "amount": {row[2]}}}\n'
-                    )
-                    n += 1
-                    if len(chunk) >= 8192:
+            try:
+                with open(out, "w") as f:
+                    chunk: list[str] = []
+                    for row in iterator:
+                        i, b, a = row[0], row[1], row[2]
+                        if not (type(i) is int and type(b) is int and type(a) is int):
+                            raise TypeError(
+                                "graft_ledger_sink writes int64-only rows; got "
+                                f"{tuple(type(v).__name__ for v in (i, b, a))} in row {n}"
+                            )
+                        chunk.append(f'{{"id": {i}, "bucket": {b}, "amount": {a}}}\n')
+                        n += 1
+                        if len(chunk) >= 8192:
+                            f.writelines(chunk)
+                            chunk.clear()
+                    if chunk:
                         f.writelines(chunk)
-                        chunk.clear()
-                if chunk:
-                    f.writelines(chunk)
+            except BaseException:
+                _os.remove(out)
+                raise
             return _FileCommit(out, n)
 
         def commit(self, messages, batchId) -> None:

@@ -7,26 +7,26 @@ keeps predicate pushdown + column pruning (verify via ``PushedFilters`` /
 
 from __future__ import annotations
 
+import os
 import weakref
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import TESTDATA_TABLES
 
-# Fingerprint-keyed LOADER memo (r14 schema memo, widened r15): a
+# Fingerprint-keyed plan memo (r14 schema memo, widened r15): a
 # bench/oracle session calls ``load_table`` thousands of times over the same
 # few immutable files, and every bare ``spark.read.parquet`` re-infers the
 # schema (driver-side footer read + file listing, 75-97 ms) while even a
 # schema-supplied read still pays ~10-15 ms of py4j/analysis chatter per
-# call.  A DataFrame is an immutable logical plan — handing the SAME plan
-# object to every caller is semantically identical to rebuilding it (every
-# execution still scans parquet; transformations derive new frames), so the
-# memo stores the fully-normalized DataFrame per (sf_dir, table,
-# max-mtime+bytes fingerprint).  This is metadata, never data: a rewritten
-# fixture at the same path changes the fingerprint and misses; an
-# unfingerprintable path degrades to plain inference.
+# call.  So the memo stores the fully-normalized scan DataFrame per
+# ``memo_key``, and ``prepared`` stores whole analysed query plans (the
+# dashboard panels) in the same dict.  This is metadata, never data: a
+# rewritten fixture at the same path changes the fingerprint and misses;
+# an unfingerprintable path degrades to a plain build.
 #
 # Keying (r14 VERDICT "what's wrong" #2): entries hang off the SparkSession
 # itself via a WeakKeyDictionary — a plan built under one session's conf
@@ -38,12 +38,51 @@ _SESSION_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 )
 
 
-def _session_state(spark: SparkSession) -> dict:
-    st = _SESSION_MEMO.get(spark)
-    if st is None:
-        st = {"nanos_conf_set": False, "dfs": {}}
-        _SESSION_MEMO[spark] = st
-    return st
+def _session_dfs(spark: SparkSession) -> dict:
+    dfs = _SESSION_MEMO.get(spark)
+    if dfs is None:
+        # Must hold for ANY caller-provided session (the driver builds its
+        # own): events.ts is parquet TIMESTAMP(NANOS), unreadable by Spark 4
+        # without this runtime conf.  Set once per session — the conf is
+        # never unset by the engine, and a memoized frame's scan fails at
+        # read time exactly like a fresh one would if a caller
+        # force-disabled it.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        dfs = _SESSION_MEMO[spark] = {}
+    return dfs
+
+
+def memo_key(spark: SparkSession, sf_dir: str, name: str) -> tuple:
+    """The key of anything derived from table ``name`` under ``sf_dir``:
+    the absolute directory, the table's (max mtime, bytes) fingerprint and
+    the session time zone.  Analysis bakes the zone into the plan (the
+    NTZ→timestamp cast below, ``date_trunc``, ``to_date``), so a plan
+    memoized under one zone is wrong under another.  Raises if the table
+    cannot be fingerprinted."""
+    from ..operators._memo import table_fingerprint
+
+    path = sf_dir if "://" in sf_dir else os.path.abspath(sf_dir)
+    return (
+        path,
+        name,
+        table_fingerprint(sf_dir, name),
+        spark.conf.get("spark.sql.session.timeZone"),
+    )
+
+
+def _memoized(spark: SparkSession, key_of, build) -> DataFrame:
+    dfs = _session_dfs(spark)
+    try:
+        key = key_of()
+    except Exception:
+        return build()
+    df = dfs.get(key)
+    if df is None:
+        df = build()
+        if len(dfs) > 256:  # bound: a few fixtures x tables x panels
+            dfs.clear()
+        dfs[key] = df
+    return df
 
 
 def _load_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -63,28 +102,38 @@ def _load_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from ..operators._memo import table_fingerprint
+    """Table ``name`` of ``sf_dir`` (memoized per session and ``memo_key``).
 
-    st = _session_state(spark)
-    # Must hold for ANY caller-provided session (the driver builds its own):
-    # events.ts is parquet TIMESTAMP(NANOS), unreadable by Spark 4 without
-    # this runtime conf.  Set once per session — the conf is never unset by
-    # the engine, and a memoized frame's scan fails at read time exactly
-    # like a fresh one would if a caller force-disabled it.
-    if not st["nanos_conf_set"]:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        st["nanos_conf_set"] = True
-    try:
-        key = (sf_dir, name, table_fingerprint(sf_dir, name))
-    except Exception:
-        return _load_uncached(spark, sf_dir, name)
-    df = st["dfs"].get(key)
-    if df is None:
-        df = _load_uncached(spark, sf_dir, name)
-        if len(st["dfs"]) > 256:  # bound: a few fixtures x tables
-            st["dfs"].clear()
-        st["dfs"][key] = df
-    return df
+    The memo hands out the same scan DataFrame every time: a bare scan has
+    no shuffle, and every transformation of it derives a new Dataset."""
+    return _memoized(
+        spark,
+        lambda: memo_key(spark, sf_dir, name),
+        lambda: _load_uncached(spark, sf_dir, name),
+    )
+
+
+def prepared(
+    spark: SparkSession, sf_dir: str, table: str, kind: str, build
+) -> DataFrame:
+    """A fresh Dataset over the plan ``build()`` makes from ``table``.
+
+    The first call per (``kind``, ``memo_key``) builds and analyses the
+    plan.  Every call, the first included, wraps that analysed plan in a
+    new Dataset, so each call gets its own QueryExecution (optimised,
+    planned and executed anew, scanning the table again) while the
+    analyser returns the already-analysed plan untouched (0.3 ms a call
+    against 7 ms for ``plan.select("*")``, warm, local[2] on a 4-core
+    host) — the same idea as Structured
+    Streaming's per-trigger execution of one analysed plan.  The memoized
+    Dataset itself is never handed out: re-collecting one Dataset re-uses
+    its executed plan, whose finished shuffle-map stages Spark skips,
+    serving an earlier call's shuffle output."""
+    plan = _memoized(spark, lambda: (kind,) + memo_key(spark, sf_dir, table), build)
+    # The class by name: walking spark._jvm's packages costs 6 py4j calls.
+    dataset = JavaClass("org.apache.spark.sql.classic.Dataset", spark._jvm._gateway_client)
+    fresh = dataset.ofRows(spark._jsparkSession, plan._jdf.queryExecution().analyzed())
+    return DataFrame(fresh, spark)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

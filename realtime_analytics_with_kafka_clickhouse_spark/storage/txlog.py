@@ -280,9 +280,14 @@ def dir_zone_map(table: str, rel: str, cols: list[str]) -> dict:
 
 def write_data_dir(df: DataFrame, table: str) -> str:
     """Write a new immutable data directory; returns its table-relative
-    name.  Invisible to readers until some commit names it."""
+    name.  Invisible to readers until some commit names it; a failed
+    write deletes its partial output."""
     rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-    df.write.mode("overwrite").parquet(f"{table}/{rel}")
+    try:
+        df.write.mode("overwrite").parquet(f"{table}/{rel}")
+    except BaseException:
+        fs.delete(df.sparkSession, f"{table}/{rel}")
+        raise
     return rel
 
 
@@ -375,32 +380,47 @@ def append_tx(
     bloom: dict = {}
     if _staged is not None:
         new_dir, zone, bloom = _staged
-    for _ in range(max_attempts):
-        version, commit = snapshot(spark, table)
-        if (
-            batch_id is not None
-            and commit is not None
-            and commit.get("last_merged_batch") is not None
-            and batch_id <= commit["last_merged_batch"]
-        ):
-            if new_dir is not None:
-                fs.delete(spark, f"{table}/{new_dir}")
-            return False
-        if new_dir is None:  # write once, retry only the commit
-            new_dir = write_data_dir(df, table)
-            zone = dir_zone_map(table, new_dir, stats_cols) if stats_cols else {}
-            bloom = dir_bloom(spark, table, new_dir, bloom_cols) if bloom_cols else {}
-        dirs = (commit["dirs"] if commit else []) + [new_dir]
-        stats = dict(commit.get("stats", {})) if commit else {}
-        blooms = dict(commit.get("blooms", {})) if commit else {}
-        if zone:
-            stats[new_dir] = zone
-        if bloom:
-            blooms[new_dir] = bloom
-        if try_commit(spark, table, version + 1, dirs, batch_id, stats, blooms):
-            return True
-    fs.delete(spark, f"{table}/{new_dir}")
-    raise RuntimeError(f"append_tx: gave up after {max_attempts} commit races on {table}")
+    try:
+        for _ in range(max_attempts):
+            version, commit = snapshot(spark, table)
+            if (
+                batch_id is not None
+                and commit is not None
+                and commit.get("last_merged_batch") is not None
+                and batch_id <= commit["last_merged_batch"]
+            ):
+                if new_dir is not None:
+                    fs.delete(spark, f"{table}/{new_dir}")
+                return False
+            if new_dir is None:  # write once, retry only the commit
+                new_dir = write_data_dir(df, table)
+                zone = dir_zone_map(table, new_dir, stats_cols) if stats_cols else {}
+                bloom = dir_bloom(spark, table, new_dir, bloom_cols) if bloom_cols else {}
+            dirs = (commit["dirs"] if commit else []) + [new_dir]
+            stats = dict(commit.get("stats", {})) if commit else {}
+            blooms = dict(commit.get("blooms", {})) if commit else {}
+            if zone:
+                stats[new_dir] = zone
+            if bloom:
+                blooms[new_dir] = bloom
+            if try_commit(spark, table, version + 1, dirs, batch_id, stats, blooms):
+                return True
+        raise RuntimeError(f"append_tx: gave up after {max_attempts} commit races on {table}")
+    except BaseException:
+        if new_dir is not None:
+            _drop_uncommitted(spark, table, [new_dir])
+        raise
+
+
+def _drop_uncommitted(spark: SparkSession, table: str, dirs: list[str]) -> None:
+    """Delete those of ``dirs`` that the current snapshot does not name —
+    the cleanup of a writer that raised.  A commit that raised may still
+    have landed, so the log, not the writer, decides."""
+    _, commit = snapshot(spark, table)
+    named = set(commit["dirs"]) if commit else set()
+    for rel in dirs:
+        if rel not in named:
+            fs.delete(spark, f"{table}/{rel}")
 
 
 def append_many_tx(
@@ -421,29 +441,52 @@ def append_many_tx(
     Note the write-before-replay-check ordering: a batch whose id turns
     out already merged has its staged dir deleted (same terminal state as
     ``append_tx``, which checks first and never writes).  Callers on
-    fresh tables (the index builders) never hit that branch."""
+    fresh tables (the index builders) never hit that branch.
+
+    Failure leaves no orphan: if a write or a commit raises, every staged
+    dir the log does not name is deleted before the error propagates —
+    the batches not yet committed are simply not appended (``append_tx``
+    keeps the same rule for its own dir)."""
     from concurrent.futures import ThreadPoolExecutor
 
     def stage(df: DataFrame) -> tuple[str, dict, dict]:
         rel = write_data_dir(df, table)
-        zone = dir_zone_map(table, rel, stats_cols) if stats_cols else {}
-        bloom = dir_bloom(spark, table, rel, bloom_cols) if bloom_cols else {}
+        try:
+            zone = dir_zone_map(table, rel, stats_cols) if stats_cols else {}
+            bloom = dir_bloom(spark, table, rel, bloom_cols) if bloom_cols else {}
+        except BaseException:
+            fs.delete(spark, f"{table}/{rel}")
+            raise
         return rel, zone, bloom
 
     with ThreadPoolExecutor(max_workers=min(4, max(len(batches), 1))) as pool:
-        staged = list(pool.map(stage, (df for df, _ in batches)))
-    return [
-        append_tx(
-            spark,
-            table,
-            df,
-            batch_id=bid,
-            stats_cols=stats_cols,
-            bloom_cols=bloom_cols,
-            _staged=st,
-        )
-        for (df, bid), st in zip(batches, staged)
-    ]
+        futures = [pool.submit(stage, df) for df, _ in batches]
+    staged = [f.result() for f in futures if f.exception() is None]
+    handed = 0
+    try:
+        for f in futures:  # re-raise the first failed write
+            f.result()
+        out = []
+        for (df, bid), st in zip(batches, staged):
+            handed += 1
+            out.append(
+                append_tx(
+                    spark,
+                    table,
+                    df,
+                    batch_id=bid,
+                    stats_cols=stats_cols,
+                    bloom_cols=bloom_cols,
+                    _staged=st,
+                )
+            )
+        return out
+    except BaseException:
+        # append_tx cleans up every dir handed to it, raising or not; the
+        # rest were never committed.
+        for rel, _, _ in staged[handed:]:
+            fs.delete(spark, f"{table}/{rel}")
+        raise
 
 
 #: Default vacuum retention for never-committed data directories.  A dir

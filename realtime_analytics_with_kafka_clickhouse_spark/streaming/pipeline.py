@@ -33,7 +33,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.scalars import dsum, to_start_of_hour
-from ..sources.tables import load_table
+# The A1 partial of one micro-batch, under its ingest-path name: the one
+# events -> A1 definition lives in operators.rollups.
+from ..operators.rollups import (
+    hourly_category_rollup_aggregate as hourly_rollup_aggregate,
+    single_partition,
+)
+from ..sources.tables import load_table, memo_key, prepared
 from ..storage import fs
 
 ROLLUP_KEYS = ["hour", "category"]
@@ -42,26 +48,6 @@ ROLLUP_KEYS = ["hour", "category"]
 # makes foreachBatch replay (post-crash re-delivery of the same epoch)
 # idempotent — an already-merged batch id is skipped instead of re-summed.
 MERGE_MARKER = "_LAST_MERGED_BATCH"
-
-
-def hourly_rollup_aggregate(batch: DataFrame) -> DataFrame:
-    """The A1 rollup aggregation over one micro-batch of events
-    (hour x category -> count/revenue/quantity over completed orders),
-    identical semantics to operators.rollups.hourly_category_rollup."""
-    from ..operators.rollups import category_key, completed, quantity_key
-
-    return (
-        batch.filter(completed())
-        .groupBy(
-            to_start_of_hour("ts").alias("hour"),
-            category_key().alias("category"),
-        )
-        .agg(
-            F.count("*").alias("order_count"),
-            dsum("value").alias("total_revenue"),
-            F.sum(quantity_key()).alias("total_quantity"),
-        )
-    )
 
 
 def last_merged_batch(spark: SparkSession, rollup_dir: str) -> int | None:
@@ -299,8 +285,9 @@ def compacted_rollup_txlog(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Stored-MV memo for accelerator reads: maintenance happens ONCE on the
 # write path (first call); dashboard reads then hit the stored table only —
 # that separation IS the accelerator semantics (a dashboard query does not
-# rebuild the MV it reads).  Keyed on the events table's fingerprint too, so
-# a table rewritten at the same path rebuilds its rollup.
+# rebuild the MV it reads).  Keyed like the session plan memo
+# (``sources.tables.memo_key``): a table rewritten at the same path, or a
+# new session time zone, rebuilds the rollup.
 _STORED_ROLLUP_MEMO: dict[tuple, str] = {}
 
 
@@ -309,18 +296,24 @@ def hourly_trend_from_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     answered from the STORED incremental rollup table — sum across
     categories of the MERGE-maintained A1 state — never touching raw
     events at read time.  The oracle is the raw-events A8 aggregation, so
-    the driver proves accelerator == base table every round."""
-    from ..operators._memo import table_fingerprint
+    the driver proves accelerator == base table every round.
+
+    A prepared panel (``operators.rollups`` "Scale notes"): the stored
+    rollup's txlog is read once per prepared plan, and a one-partition
+    rollup scan is re-summed in a single task."""
     from ..storage import txlog
 
-    key = (os.path.abspath(sf_dir), table_fingerprint(sf_dir, "events"))
-    if key not in _STORED_ROLLUP_MEMO:
-        _STORED_ROLLUP_MEMO[key] = _build_txlog_rollup(spark, sf_dir)
-    stored = txlog.read_table(spark, _STORED_ROLLUP_MEMO[key])
-    return stored.groupBy("hour").agg(
-        F.sum("order_count").alias("order_count"),
-        dsum("total_revenue").alias("total_revenue"),
-    )
+    def build() -> DataFrame:
+        key = memo_key(spark, sf_dir, "events")
+        if key not in _STORED_ROLLUP_MEMO:
+            _STORED_ROLLUP_MEMO[key] = _build_txlog_rollup(spark, sf_dir)
+        stored = txlog.read_table(spark, _STORED_ROLLUP_MEMO[key])
+        return single_partition(stored).groupBy("hour").agg(
+            F.sum("order_count").alias("order_count"),
+            dsum("total_revenue").alias("total_revenue"),
+        )
+
+    return prepared(spark, sf_dir, "events", "hourly_trend_from_rollup", build)
 
 
 def process_ingest_batch(
@@ -3094,7 +3087,14 @@ def run_arrival_lifecycle(
       the probe set stays "accepted by strictly earlier epochs" — the
       recursion every oracle unrolls);
     - ``after_epoch(bi, epoch, batch, hits)`` — optional extra state
-      mutation (curation's Replacing merge into the curated table);
+      mutation (curation's Replacing merge into the curated table).
+      It runs CONCURRENTLY with the epoch's quarantine and index
+      appends, so it must be independent of them: it may read only its
+      arguments and tables other than ``quarantine`` and ``index``, must
+      write only its own table, and must leave that table unchanged when
+      a replayed epoch calls it again (curation's merge keeps the latest
+      version per key).  Its writes are visible to the next epoch's
+      kernels, never to this epoch's;
     - ``ledger() -> DataFrame`` — the driver row, assembled while the
       tuned shuffle sizing is still in effect.
     """

@@ -131,6 +131,23 @@ def test_pyds_sink_commit_replaces_replayed_batch(tmp_path):
     assert sorted(r["id"] for r in rows) == [1, 2, 3], "no dup/lost rows"
 
 
+def test_pyds_sink_rejects_a_bad_type_in_a_later_row(tmp_path):
+    """Every row is type-checked, not only a partition's first: a float
+    or null past row 0 fails the write and leaves no partial file."""
+    import pytest
+
+    from realtime_analytics_with_kafka_clickhouse_spark.sources import (
+        pydatasource as pds,
+    )
+
+    cls = pds._make_sink_datasource_class()
+    writer = cls(options={"path": str(tmp_path)}).streamWriter(None, False)
+    for bad in ((3, 3, 30.5), (3, None, 30)):
+        with pytest.raises(TypeError, match="in row 2"):
+            writer.write(iter([(1, 1, 10), (2, 2, 20), bad]))
+    assert list((tmp_path / "files").iterdir()) == []
+
+
 def test_zorder_lifecycle_append_degrades_reoptimize_restores(spark, tmp_path):
     """Arrival-ordered appends after a Z-order carry full-span zone maps
     (nothing prunable in the new dirs); re-running compact_tx_zorder must

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from realtime_analytics_with_kafka_clickhouse_spark.sources.tables import load_table
@@ -95,6 +96,74 @@ def test_txlog_vacuum_keeps_current_snapshot(spark, tmp_path):
     assert sorted(map(tuple, txlog.read_table(spark, table).collect())) == before
     data_dirs = fs.list_dir(spark, f"{table}/{txlog.DATA_DIR}")
     assert len(data_dirs) == 1
+
+
+def _dirs_outside_log(spark, table: str) -> set[str]:
+    _, commit = txlog.snapshot(spark, table)
+    named = set(commit["dirs"]) if commit else set()
+    on_disk = {f"{txlog.DATA_DIR}/{d}" for d in fs.list_dir(spark, f"{table}/{txlog.DATA_DIR}")}
+    return on_disk - named
+
+
+@pytest.mark.parametrize("landed", [False, True], ids=["lost", "landed"])
+def test_append_tx_failed_commit_keeps_only_logged_dirs(spark, tmp_path, monkeypatch, landed):
+    """A commit that raises: the written dir is deleted unless the commit
+    landed before the error, in which case the log names it and it stays."""
+    events = load_table(spark, SF_DIR, "events").limit(400)
+    table = str(tmp_path / "tx")
+    real_commit = txlog.try_commit
+
+    def commit_raises(*args, **kwargs):
+        if landed:
+            real_commit(*args, **kwargs)
+        raise OSError("commit store unavailable")
+
+    monkeypatch.setattr(txlog, "try_commit", commit_raises)
+    with pytest.raises(OSError, match="commit store unavailable"):
+        txlog.append_tx(spark, table, hourly_rollup_aggregate(events), batch_id=0)
+    assert txlog.latest_version(spark, table) == int(landed)
+    assert len(fs.list_dir(spark, f"{table}/{txlog.DATA_DIR}")) == int(landed)
+    assert _dirs_outside_log(spark, table) == set()
+
+
+def test_append_many_tx_failed_commit_leaves_no_orphan_dir(spark, tmp_path, monkeypatch):
+    """The 2nd batch's commit raises: the 1st batch stays committed, and
+    neither its dir nor the staged dirs of the 2nd and later batches are
+    left outside the log."""
+    events = load_table(spark, SF_DIR, "events").limit(400)
+    table = str(tmp_path / "many_tx")
+    batches = [
+        (hourly_rollup_aggregate(events.filter(F.pmod("event_id", F.lit(4)) == i)), i)
+        for i in range(4)
+    ]
+    real_commit = txlog.try_commit
+    calls = []
+
+    def commit_fails_second(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise OSError("commit store unavailable")
+        return real_commit(*args, **kwargs)
+
+    monkeypatch.setattr(txlog, "try_commit", commit_fails_second)
+    with pytest.raises(OSError, match="commit store unavailable"):
+        txlog.append_many_tx(spark, table, batches)
+    assert txlog.latest_version(spark, table) == 1
+    assert len(fs.list_dir(spark, f"{table}/{txlog.DATA_DIR}")) == 1
+    assert _dirs_outside_log(spark, table) == set()
+
+
+def test_append_many_tx_failed_write_leaves_no_orphan_dir(spark, tmp_path):
+    """One batch's data write fails: nothing is committed and the other
+    batches' staged dirs are deleted."""
+    events = load_table(spark, SF_DIR, "events").limit(400)
+    table = str(tmp_path / "many_tx")
+    good = hourly_rollup_aggregate(events)
+    bad = good.withColumn("order_count", F.assert_true(F.lit(False)).cast("long"))
+    with pytest.raises(Exception, match="is not true"):
+        txlog.append_many_tx(spark, table, [(good, 0), (bad, 1), (good, 2)])
+    assert txlog.latest_version(spark, table) == 0
+    assert fs.list_dir(spark, f"{table}/{txlog.DATA_DIR}") == []
 
 
 def test_hourly_trend_from_rollup_equals_raw_aggregation(spark):
