@@ -17,11 +17,22 @@ DataFrame lineage.  Keys carry a metadata-only dataset fingerprint
 so object-store URIs work like local paths) — a rewritten fixture at the
 same path misses the cache instead of serving stale results.  One slot
 per artifact kind bounds footprint.
+
+The module also owns the package's one scratch workspace: ``scratch_dir``
+hands out every temp path (memo artifacts, stream checkpoints, build-once
+tables, file mirrors) under per-PID roots ``spark_graft_<area>-<pid>``,
+and one atexit sweeper removes this process's roots plus any root whose
+owner pid is gone or was reused (see ``scratch_dir`` for both rules).
 """
 
 from __future__ import annotations
 
+import atexit
+import glob
 import os
+import shutil
+import tempfile
+import uuid
 from typing import Any, Callable
 
 _MEMO: dict = {}
@@ -29,13 +40,12 @@ _MEMO: dict = {}
 _MISS = object()
 
 
-def table_fingerprint(sf_dir: str, table: str) -> tuple:
-    """(max mtime_ns, total bytes) over the table's parquet file(s)."""
+def path_fingerprint(filesystem, fs_path: str) -> tuple:
+    """(max mtime_ns, total bytes) over the file at ``fs_path``, or over
+    every file below it when it is a directory: a metadata-only identity
+    that changes when the data is rewritten at the same path."""
     from pyarrow import fs as pafs
 
-    filesystem, fs_path = pafs.FileSystem.from_uri(
-        os.path.join(sf_dir, f"{table}.parquet")
-    )
     info = filesystem.get_file_info(fs_path)
     if info.type == pafs.FileType.Directory:
         infos = [
@@ -48,6 +58,15 @@ def table_fingerprint(sf_dir: str, table: str) -> tuple:
     return (
         max((i.mtime_ns or 0) for i in infos) if infos else 0,
         sum((i.size or 0) for i in infos),
+    )
+
+
+def table_fingerprint(sf_dir: str, table: str) -> tuple:
+    """``path_fingerprint`` of the table's parquet file(s)."""
+    from pyarrow import fs as pafs
+
+    return path_fingerprint(
+        *pafs.FileSystem.from_uri(os.path.join(sf_dir, f"{table}.parquet"))
     )
 
 
@@ -105,53 +124,95 @@ def is_miss(value: Any) -> bool:
     return value is _MISS
 
 
-def _scratch_root() -> str:
-    """Per-PID scratch root (r15 hygiene, r14 VERDICT #4 / ADVICE #3):
-    this process's artifacts live under one pid-suffixed directory that an
-    atexit hook removes, so a normal exit leaves nothing behind; roots
-    orphaned by KILLED processes are swept at exit by whichever later
-    process finds their owner pid dead.  Dirs are never deleted DURING the
-    process's lifetime anymore — a lazy DataFrame handed out before a
-    fingerprint eviction keeps reading its (now unreferenced) dir instead
-    of failing mid-query; the handful of evicted dirs is bounded by
-    fixture switches and dies with the root."""
-    import tempfile
+def scratch_dir(area: str, name: str) -> str:
+    """A fresh path ``<tmp>/spark_graft_<area>-<pid>/<name>-<uuid8>`` for
+    one scratch artifact; nothing is created.  Every scratch file of the
+    package lives under such a root.
 
-    return os.path.join(tempfile.gettempdir(), f"spark_graft_memo-{os.getpid()}")
+    Per-PID rule: a process writes only under roots that carry its own
+    pid, so no process deletes what another live process reads (a shared
+    root let an exiting pytest delete files under a live bench stream).
+    Dirs are never deleted while the process runs: a lazy DataFrame handed
+    out before a memo eviction keeps reading its now unreferenced dir
+    instead of failing mid-query, and such dirs die with the root.
+
+    Sweep rule: at exit ``_sweep_scratch_roots`` removes this process's
+    roots and every root ``_orphaned`` finds ownerless, so a normal exit
+    leaves nothing behind and a killed process's roots go at the next
+    exit of any process.
+
+    Code outside the package reads two root names, so they stay fixed:
+    ``spark_graft_memo-<pid>`` (a plan pin) and
+    ``spark_graft_inc_rollups-<pid>`` (the benchmark's stored bytes)."""
+    return os.path.join(_root(area, os.getpid()), f"{name}-{uuid.uuid4().hex[:8]}")
 
 
+def _root(area: str, pid: int | str) -> str:
+    """``<tmp>/spark_graft_<area>-<pid>``; ``"*"`` for both is the glob of
+    every root."""
+    return os.path.join(tempfile.gettempdir(), f"spark_graft_{area}-{pid}")
+
+
+# Start times come from /proc at clock-tick resolution against a boot time
+# in whole seconds; a root must predate its pid's start by more than this
+# before the pid counts as reused.
+_PID_REUSE_SLACK_S = 5.0
+
+
+def _started_at(pid: int) -> float | None:
+    """Epoch seconds at which ``pid`` started, or None where /proc does
+    not say."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            ticks = int(f.read().rsplit(")", 1)[1].split()[19])
+        with open("/proc/stat") as f:
+            boot = next(int(ln.split()[1]) for ln in f if ln.startswith("btime "))
+    except (OSError, ValueError, IndexError, StopIteration):
+        return None
+    return boot + ticks / os.sysconf("SC_CLK_TCK")
+
+
+def _orphaned(root: str) -> bool:
+    """True when the pid in ``root``'s name is gone, or is alive but
+    started after the root was last written (the pid was reused).  A root
+    whose live owner started before it was made is never orphaned: the
+    owner's writes only move its mtime forward."""
+    try:
+        pid = int(root.rsplit("-", 1)[1])
+    except ValueError:
+        return False  # no pid in the name: no owner to check
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return True
+    except PermissionError:
+        pass  # alive under another uid
+    started = _started_at(pid)
+    try:
+        return started is not None and (
+            os.stat(root).st_mtime + _PID_REUSE_SLACK_S < started
+        )
+    except FileNotFoundError:
+        return False
+
+
+@atexit.register
 def _sweep_scratch_roots() -> None:
-    """Remove this process's scratch root and any root whose owner pid is
-    gone (registered atexit)."""
-    import glob
-    import shutil
-    import tempfile
-
-    shutil.rmtree(_scratch_root(), ignore_errors=True)
-    for p in glob.glob(os.path.join(tempfile.gettempdir(), "spark_graft_memo-*")):
-        try:
-            pid = int(p.rsplit("-", 1)[1])
-            os.kill(pid, 0)  # raises if the owner is gone
-        except (ValueError, ProcessLookupError):
-            shutil.rmtree(p, ignore_errors=True)
-        except PermissionError:
-            pass  # pid alive under another uid — leave it
-
-
-import atexit as _atexit  # noqa: E402
-
-_atexit.register(_sweep_scratch_roots)
+    """Remove this process's scratch roots and every orphaned one."""
+    mine = f"-{os.getpid()}"
+    for root in glob.glob(_root("*", "*")):
+        if root.endswith(mine) or _orphaned(root):
+            shutil.rmtree(root, ignore_errors=True)
 
 
 def scratch_persist(df, kind: str) -> str:
     """Persist a derived DataFrame to a scratch parquet table and return
     its path — the distributed sibling of the in-memory memo value: the
     artifact stays on disk (never collected to the driver), and replays
-    are ordinary parquet scans.  Dirs live under the per-PID root (see
-    ``_scratch_root``); superseded dirs are left until process exit so
-    earlier lazy frames stay readable."""
-    import uuid
-
-    path = os.path.join(_scratch_root(), f"{kind}-{uuid.uuid4().hex[:8]}")
+    are ordinary parquet scans.  The dir is a ``scratch_dir`` under the
+    ``spark_graft_memo-<pid>`` root; a fingerprint eviction writes a fresh
+    dir and leaves the superseded one to the exit sweep, so earlier lazy
+    frames stay readable."""
+    path = scratch_dir("memo", kind)
     df.write.mode("overwrite").parquet(path)
     return path

@@ -33,7 +33,8 @@ from ..functions.hints import (
     collect_request_sized,
     runtime_broadcast,
 )
-from ..sources.tables import load_table
+from ..sources.tables import load_table, memo_key
+from ._memo import path_fingerprint, scratch_dir, scratch_persist
 
 DIM = 64
 TOP_K = 5
@@ -62,26 +63,6 @@ def n_lsh_planes(n_vectors: int) -> int:
 _CAND_CACHE: dict = {}
 
 
-def _dataset_fingerprint(filesystem, fs_path) -> tuple:
-    """(max mtime, total bytes) over the path's parquet files — cheap
-    metadata-only identity for cache invalidation on rewrite."""
-    from pyarrow import fs as pafs
-
-    info = filesystem.get_file_info(fs_path)
-    if info.type == pafs.FileType.Directory:
-        infos = [
-            i
-            for i in filesystem.get_file_info(pafs.FileSelector(fs_path, recursive=True))
-            if i.is_file
-        ]
-    else:
-        infos = [info]
-    return (
-        max((i.mtime_ns or 0) for i in infos) if infos else 0,
-        sum((i.size or 0) for i in infos),
-    )
-
-
 def _cand_cache_get(kind: str, path: str, load):
     """Fetch-or-load with per-kind single-slot eviction."""
     import pyarrow.parquet as pq  # noqa: F401
@@ -91,7 +72,7 @@ def _cand_cache_get(kind: str, path: str, load):
     # (s3://, hdfs://, gs://) — executor-side reads must not assume a
     # POSIX mount (round-2 advice).
     filesystem, fs_path = pafs.FileSystem.from_uri(path)
-    key = (kind, path, _dataset_fingerprint(filesystem, fs_path))
+    key = (kind, path, path_fingerprint(filesystem, fs_path))
     hit = _CAND_CACHE.get(key)
     if hit is None:
         for k in [k for k in _CAND_CACHE if k[0] == kind]:
@@ -672,7 +653,7 @@ def _ranked_cells_src(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays distributed (parquet out, parquet in, never collected), and
     persisting the cell assignment is exactly what a production IVF
     deployment does — the index IS this table."""
-    from ._memo import memo_get, scratch_persist
+    from ._memo import memo_get
 
     def compute():
         emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1038,7 +1019,7 @@ def ann_query_broadcast_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_INDEX_MEMO: dict[str, str] = {}
+_IVF_INDEX_MEMO: dict[tuple, str] = {}
 
 
 def _build_ivf_index_table(spark: SparkSession, sf_dir: str) -> str:
@@ -1050,24 +1031,16 @@ def _build_ivf_index_table(spark: SparkSession, sf_dir: str) -> str:
     queries through ordinary pruned scans, and inherits the txlog's
     snapshot/commit semantics (a rebuild is just new appends + a new
     snapshot)."""
-    import os as _os
-    import tempfile as _tempfile
-    import uuid as _uuid
-
     from ..storage import txlog
 
-    key = _os.path.abspath(sf_dir)
+    key = memo_key(spark, sf_dir, "embeddings")
     if key not in _IVF_INDEX_MEMO:
         assigned = _ranked_cells_src(spark, sf_dir).select(
             "vec_id",
             F.element_at("ranked", 1)["c"].alias("cluster"),
             "embedding",
         ).persist()
-        table = _os.path.join(
-            _tempfile.gettempdir(),
-            "spark_graft_ivf_index",
-            f"idx-{_uuid.uuid4().hex[:8]}",
-        )
+        table = scratch_dir("ivf_index", "idx")
         try:
             bounds = [KMEANS_K * i // 4 for i in range(5)]
             bounds[4] = KMEANS_K
@@ -1257,10 +1230,6 @@ def ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the pruning proof is deterministic).  The corpus is never
     re-assigned, the quantizer never retrains, embeddings never ride a
     shuffle."""
-    import os as _os
-    import tempfile as _tempfile
-    import uuid as _uuid
-
     from ..storage import txlog
 
     assigned = _ranked_cells_src(spark, sf_dir).select(
@@ -1269,11 +1238,7 @@ def ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
     ).persist()
     is_batch = F.col("vec_id") % IVF_INGEST_MOD == 0
-    table = _os.path.join(
-        _tempfile.gettempdir(),
-        "spark_graft_ivf_index",
-        f"inc-{_uuid.uuid4().hex[:8]}",
-    )
+    table = scratch_dir("ivf_index", "inc")
     bounds = [KMEANS_K * i // 4 for i in range(5)]
     bounds[4] = KMEANS_K
     try:
@@ -1863,7 +1828,7 @@ def _pq_codes_src(spark: SparkSession, sf_dir: str, residual: bool) -> DataFrame
     persisted codes table IS the product-quantization index every
     deployment serves from — encode-once is the production shape, not a
     shortcut."""
-    from ._memo import memo_get, scratch_persist
+    from ._memo import memo_get
 
     kind = "pq_codes_residual" if residual else "pq_codes"
 
@@ -2202,7 +2167,7 @@ def _exact_cosine_ground_truth(spark: SparkSession, sf_dir: str):
 
     def compute():
         pairs = ann_cosine_topk(spark, sf_dir).select("vec_id", "neighbor_id")
-        path = _persist_pairs(spark, pairs, "cos")
+        path = scratch_persist(pairs, "groundtruth_cos")
         stats = (
             spark.read.parquet(path)
             .agg(
@@ -2215,23 +2180,6 @@ def _exact_cosine_ground_truth(spark: SparkSession, sf_dir: str):
 
     state = memo_get("exact_cosine_topk_pairs", sf_dir, ("embeddings",), compute)
     return state["n_q"], _pairs_df(spark, state)
-
-
-def _persist_pairs(spark: SparkSession, pairs: DataFrame, kind: str) -> str:
-    """Write a ground-truth id-pair set to a scratch parquet table and
-    return its path.  The write is a plain distributed job (no driver
-    materialization); a fingerprint eviction simply writes a fresh dir —
-    stale dirs live in tmpdir until the OS sweep, never reread."""
-    import tempfile as _tempfile
-    import uuid as _uuid
-
-    path = os.path.join(
-        _tempfile.gettempdir(),
-        "spark_graft_groundtruth",
-        f"{kind}-{_uuid.uuid4().hex[:8]}",
-    )
-    pairs.write.mode("overwrite").parquet(path)
-    return path
 
 
 def _pairs_df(spark: SparkSession, state: dict) -> DataFrame:
@@ -2278,7 +2226,7 @@ def _exact_l2_ground_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") <= PQ_TOPK)
             .select(F.col("qid").alias("vec_id"), "neighbor_id")
         )
-        path = _persist_pairs(spark, rows, "l2")
+        path = scratch_persist(rows, "groundtruth_l2")
         n_pairs = spark.read.parquet(path).count()
         return {"path": path, "n_pairs": n_pairs, "dfs": {}}
 
@@ -3022,10 +2970,6 @@ def ann_ivf_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the victims, one append commit; the physical erase rides the
     OPTIMIZE the table needed anyway; serving prunes by cell exactly as
     before."""
-    import os as _os
-    import tempfile as _tempfile
-    import uuid as _uuid
-
     from ..storage import txlog
 
     assigned = _ranked_cells_src(spark, sf_dir).select(
@@ -3034,11 +2978,7 @@ def ann_ivf_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
     ).persist()
     is_victim = F.col("vec_id") % IVF_DELETE_MOD == IVF_DELETE_REM
-    table = _os.path.join(
-        _tempfile.gettempdir(),
-        "spark_graft_ivf_index",
-        f"del-{_uuid.uuid4().hex[:8]}",
-    )
+    table = scratch_dir("ivf_index", "del")
     bounds = [KMEANS_K * i // 4 for i in range(5)]
     bounds[4] = KMEANS_K
     try:
@@ -3101,17 +3041,10 @@ def stream_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-epoch cost is O(batch) — one map-side assignment,
     one O(1) append commit; the stream never holds engine state (the
     index IS the state, exactly how a production vector store ingests)."""
-    import os as _os
-    import tempfile as _tempfile
-    import uuid as _uuid
-
     from ..storage import txlog
 
-    run = _uuid.uuid4().hex[:8]
-    root = _os.path.join(_tempfile.gettempdir(), "spark_graft_ivf_stream")
-    src = _os.path.join(root, f"src-{run}")
-    ckpt = _os.path.join(root, f"ckpt-{run}")
-    table = _os.path.join(root, f"idx-{run}")
+    base = scratch_dir("ivf_stream", "run")
+    src, ckpt, table = (os.path.join(base, d) for d in ("src", "ckpt", "idx"))
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     for half in (0, 1):  # two arrival chunks -> two micro-batch epochs
         emb.filter(F.pmod("vec_id", F.lit(2)) == half).coalesce(1).write.mode(
@@ -3257,10 +3190,6 @@ def ann_ivf_quantizer_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     firing only when drift actually trips (detection is the cheap
     always-on monitor).  Embeddings never ride an unbounded shuffle; the
     driver only ever holds K*dim doubles and the 64-dim centroid rows."""
-    import os as _os
-    import tempfile as _tempfile
-    import uuid as _uuid
-
     from ..storage import txlog
     from ._memo import memo_get
 
@@ -3291,11 +3220,7 @@ def ann_ivf_quantizer_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     old_q = _kmeans_fit(spark, sf_dir)
-    table = _os.path.join(
-        _tempfile.gettempdir(),
-        "spark_graft_ivf_index",
-        f"refresh-{_uuid.uuid4().hex[:8]}",
-    )
+    table = scratch_dir("ivf_index", "refresh")
     bounds = [KMEANS_K * i // 4 for i in range(5)]
     bounds[4] = KMEANS_K
     assigned = _with_ranked_cells(emb, old_q).select(

@@ -8,28 +8,22 @@ over the data and non-deterministic under sampling, never acceptable at
 100 TB — and PERMISSIVE corrupt capture, so a bad line lands in a
 quarantine column instead of killing the scan or silently nulling.
 
-The *_mirror helpers materialize a deterministic JSON/CSV copy of a
-testdata table once per (session, sf_dir) so round-trip queries can prove
-the readers end-to-end against the same oracles as the parquet path.
+The *_mirror helpers materialize a deterministic JSON/CSV/ORC/XML copy of
+a testdata table once per table ``memo_key`` so round-trip queries can
+prove the readers end-to-end against the same oracles as the parquet path.
 """
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .tables import load_table
+from .tables import load_table, memo_key
 
-_MIRROR_ROOT = os.path.join(
-    tempfile.gettempdir(), f"spark_graft_file_mirrors-{os.getpid()}"
-)
-_MIRROR_MEMO: dict[tuple[str, str], str] = {}
+_MIRROR_MEMO: dict[tuple, str] = {}
 # Cached DLQ scans per (session, format, path): the corrupt-column split
 # needs one cache()d frame (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and
 # memoizing it — like the mirror helpers — keeps repeated reads of the
@@ -45,11 +39,6 @@ _DLQ_MEMO: dict[tuple, DataFrame] = {}
 def _session_token(spark: SparkSession) -> tuple:
     sc = spark.sparkContext
     return (sc.applicationId, sc.startTime)
-
-
-@atexit.register
-def _sweep_mirror_root() -> None:
-    shutil.rmtree(_MIRROR_ROOT, ignore_errors=True)
 
 
 EVENTS_JSON_SCHEMA = T.StructType(
@@ -77,30 +66,36 @@ ORDERS_CSV_SCHEMA = T.StructType(
 _TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"  # micros round-trip losslessly
 
 
-def json_events_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """events as JSON-lines, written once per (session, sf_dir)."""
-    key = ("json-events", os.path.abspath(sf_dir))
+def _mirror(spark: SparkSession, sf_dir: str, table: str, fmt: str, write) -> str:
+    """Path of ``table``'s ``fmt`` copy, written by ``write(df, path)``
+    once per table ``memo_key`` (a rewritten table gets a fresh copy)."""
+    from ..operators._memo import scratch_dir
+
+    key = (fmt,) + memo_key(spark, sf_dir, table)
     if key not in _MIRROR_MEMO:
-        path = os.path.join(_MIRROR_ROOT, f"events-json-{len(_MIRROR_MEMO)}")
-        load_table(spark, sf_dir, "events").select(
-            *EVENTS_JSON_SCHEMA.fieldNames()
-        ).write.option("timestampFormat", _TS_FMT).json(path)
+        path = scratch_dir("file_mirrors", f"{table}-{fmt}")
+        write(load_table(spark, sf_dir, table), path)
         _MIRROR_MEMO[key] = path
     return _MIRROR_MEMO[key]
+
+
+def json_events_mirror(spark: SparkSession, sf_dir: str) -> str:
+    """events as JSON-lines."""
+    return _mirror(
+        spark, sf_dir, "events", "json",
+        lambda df, path: df.select(*EVENTS_JSON_SCHEMA.fieldNames())
+        .write.option("timestampFormat", _TS_FMT).json(path),
+    )
 
 
 def csv_orders_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """orders as headered CSV, written once per (session, sf_dir)."""
-    key = ("csv-orders", os.path.abspath(sf_dir))
-    if key not in _MIRROR_MEMO:
-        path = os.path.join(_MIRROR_ROOT, f"orders-csv-{len(_MIRROR_MEMO)}")
-        load_table(spark, sf_dir, "orders").select(
-            *ORDERS_CSV_SCHEMA.fieldNames()
-        ).write.option("header", "true").option(
-            "timestampFormat", _TS_FMT
-        ).csv(path)
-        _MIRROR_MEMO[key] = path
-    return _MIRROR_MEMO[key]
+    """orders as headered CSV."""
+    return _mirror(
+        spark, sf_dir, "orders", "csv",
+        lambda df, path: df.select(*ORDERS_CSV_SCHEMA.fieldNames())
+        .write.option("header", "true").option("timestampFormat", _TS_FMT)
+        .csv(path),
+    )
 
 
 def read_json_with_dlq(
@@ -109,9 +104,9 @@ def read_json_with_dlq(
     """(rows, quarantined) from a JSON-lines scan: explicit schema,
     PERMISSIVE corrupt capture — the quarantine side keeps the raw line."""
     corrupt = "_corrupt_record"
-    memo_key = (*_session_token(spark), "json", os.path.abspath(path))
-    if memo_key in _DLQ_MEMO:
-        df = _DLQ_MEMO[memo_key]
+    dlq_key = (*_session_token(spark), "json", os.path.abspath(path))
+    if dlq_key in _DLQ_MEMO:
+        df = _DLQ_MEMO[dlq_key]
     else:
         full = T.StructType(
             schema.fields + [T.StructField(corrupt, T.StringType())]
@@ -127,7 +122,7 @@ def read_json_with_dlq(
         # (QUERY_ONLY_CORRUPT_RECORD_COLUMN); cache the parsed frame so both
         # sides split from one materialization — the documented pattern.
         df = df.cache()
-        _DLQ_MEMO[memo_key] = df
+        _DLQ_MEMO[dlq_key] = df
     ok = df.filter(F.col(corrupt).isNull()).drop(corrupt)
     bad = df.filter(F.col(corrupt).isNotNull()).select(
         F.col(corrupt).alias("raw")
@@ -140,9 +135,9 @@ def read_csv_with_dlq(
 ) -> tuple[DataFrame, DataFrame]:
     """(rows, quarantined) from a headered CSV scan, same contract."""
     corrupt = "_corrupt_record"
-    memo_key = (*_session_token(spark), "csv", os.path.abspath(path))
-    if memo_key in _DLQ_MEMO:
-        df = _DLQ_MEMO[memo_key]
+    dlq_key = (*_session_token(spark), "csv", os.path.abspath(path))
+    if dlq_key in _DLQ_MEMO:
+        df = _DLQ_MEMO[dlq_key]
     else:
         full = T.StructType(
             schema.fields + [T.StructField(corrupt, T.StringType())]
@@ -156,7 +151,7 @@ def read_csv_with_dlq(
             .csv(path)
         )
         df = df.cache()  # same corrupt-column restriction as JSON
-        _DLQ_MEMO[memo_key] = df
+        _DLQ_MEMO[dlq_key] = df
     ok = df.filter(F.col(corrupt).isNull()).drop(corrupt)
     bad = df.filter(F.col(corrupt).isNotNull()).select(
         F.col(corrupt).alias("raw")
@@ -165,16 +160,12 @@ def read_csv_with_dlq(
 
 
 def orc_events_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """events as ORC, written once per (session, sf_dir).  ORC is the
-    third columnar lake format next to parquet (the reader/writer ship in
-    Spark's core jars); the mirror proves scan fidelity end-to-end the
-    same way the JSON/CSV mirrors do."""
-    key = ("orc-events", os.path.abspath(sf_dir))
-    if key not in _MIRROR_MEMO:
-        path = os.path.join(_MIRROR_ROOT, f"events-orc-{len(_MIRROR_MEMO)}")
-        load_table(spark, sf_dir, "events").write.orc(path)
-        _MIRROR_MEMO[key] = path
-    return _MIRROR_MEMO[key]
+    """events as ORC.  ORC is the third columnar lake format next to
+    parquet (the reader/writer ship in Spark's core jars); the mirror
+    proves scan fidelity end-to-end the same way the JSON/CSV mirrors do."""
+    return _mirror(
+        spark, sf_dir, "events", "orc", lambda df, path: df.write.orc(path)
+    )
 
 
 def orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,21 +189,14 @@ def orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def xml_orders_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """orders as XML (Spark 4 ships the XML source in core), written once
-    per (session, sf_dir) with explicit rowTag + timestamp format."""
-    key = ("xml-orders", os.path.abspath(sf_dir))
-    if key not in _MIRROR_MEMO:
-        path = os.path.join(_MIRROR_ROOT, f"orders-xml-{len(_MIRROR_MEMO)}")
-        (
-            load_table(spark, sf_dir, "orders")
-            .select(*ORDERS_CSV_SCHEMA.fieldNames())
-            .write.format("xml")
-            .option("rowTag", "order")
-            .option("timestampFormat", _TS_FMT)
-            .save(path)
-        )
-        _MIRROR_MEMO[key] = path
-    return _MIRROR_MEMO[key]
+    """orders as XML (Spark 4 ships the XML source in core), with explicit
+    rowTag + timestamp format."""
+    return _mirror(
+        spark, sf_dir, "orders", "xml",
+        lambda df, path: df.select(*ORDERS_CSV_SCHEMA.fieldNames())
+        .write.format("xml").option("rowTag", "order")
+        .option("timestampFormat", _TS_FMT).save(path),
+    )
 
 
 def xml_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,28 +18,7 @@ hash-check a *source*, not just operators over parquet.
 
 from __future__ import annotations
 
-import atexit as _atexit
-import os as _os
-import shutil as _shutil
-import tempfile as _tempfile
-
 from pyspark.sql import DataFrame, SparkSession
-
-
-@_atexit.register
-def _sweep_pyds_roots() -> None:
-    # The streaming proofs create per-run checkpoint/output dirs under
-    # these per-PID roots; sweep them on exit (the files.py mirror-root
-    # discipline) so repeated bench/test runs don't accumulate /tmp
-    # garbage.
-    for kind in ("stream", "sink"):
-        _shutil.rmtree(
-            _os.path.join(
-                _tempfile.gettempdir(),
-                f"spark_graft_pyds_{kind}-{_os.getpid()}",
-            ),
-            ignore_errors=True,
-        )
 
 
 LEDGER_SCHEMA = "id BIGINT, bucket BIGINT, amount BIGINT"
@@ -171,16 +150,13 @@ def python_stream_datasource_rollup(spark: SparkSession, sf_dir: str) -> DataFra
     batch scan, so the DuckDB ``range(n)`` oracle hash-checks the whole
     path (generator -> offsets -> replay -> sink)."""
     import os
-    import tempfile
-    import uuid
 
     from pyspark.sql import functions as F
 
+    from ..operators._memo import scratch_dir
+
     register_ledger_stream_source(spark)
-    run = uuid.uuid4().hex[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_pyds_stream-{os.getpid()}", run
-    )
+    base = scratch_dir("pyds_stream", "run")
     ckpt, out = os.path.join(base, "ckpt"), os.path.join(base, "data")
     src = (
         spark.readStream.format("graft_ledger_stream")
@@ -340,17 +316,14 @@ def python_stream_datasource_sink_rollup(
     breaks the range(n) oracle hash."""
     import json as _json
     import os
-    import tempfile
-    import uuid
 
     from pyspark.sql import functions as F
 
+    from ..operators._memo import scratch_dir
+
     register_ledger_stream_source(spark)
     register_ledger_sink(spark)
-    run = uuid.uuid4().hex[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_pyds_sink-{os.getpid()}", run
-    )
+    base = scratch_dir("pyds_sink", "run")
     ckpt, out = os.path.join(base, "ckpt"), os.path.join(base, "out")
     os.makedirs(out, exist_ok=True)
     src = (

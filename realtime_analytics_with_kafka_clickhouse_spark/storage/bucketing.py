@@ -120,8 +120,8 @@ def salted_join(
 
 
 # Bucketed-table memo: the bucketed write (the amortized shuffle) happens
-# once per (session, sf_dir); every join against the tables after that is
-# exchange-free on both sides.
+# once per orders and lineitem ``memo_key``; every join against the tables
+# after that is exchange-free on both sides.
 _BUCKETED_MEMO: dict = {}
 
 
@@ -134,16 +134,16 @@ def bucketed_orders_lineitem_join(spark: SparkSession, sf_dir: str) -> DataFrame
     join+aggregate, so the row proves bucketed == unbucketed results;
     tests/test_plans.py pins the exchange-free plan shape."""
     import os
-    import tempfile
     import uuid
 
-    from ..sources.tables import load_table
     from ..functions.scalars import dsum
+    from ..operators._memo import scratch_dir
+    from ..sources.tables import load_table, memo_key
 
-    key = os.path.abspath(sf_dir)
+    key = memo_key(spark, sf_dir, "orders") + memo_key(spark, sf_dir, "lineitem")
     if key not in _BUCKETED_MEMO:
         run = uuid.uuid4().hex[:8]
-        root = os.path.join(tempfile.gettempdir(), "spark_graft_bucketed", run)
+        root = scratch_dir("bucketed", run)
         ot, lt = f"orders_bkt_{run}", f"lineitem_bkt_{run}"
         write_bucketed(
             load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),

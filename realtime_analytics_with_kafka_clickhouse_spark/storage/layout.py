@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fs
+from ..operators._memo import scratch_dir
 from ..operators.normalize import with_partition_month
 
 
@@ -196,7 +197,7 @@ def update_rows(
     return touched
 
 
-_MUTATION_TABLE_MEMO: dict[str, str] = {}
+_MUTATION_TABLE_MEMO: dict[tuple, str] = {}
 
 
 def order_update_mutation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,14 +213,10 @@ def order_update_mutation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the rewrite touches only partitions holding the
     subject's rows (bounded by orders-per-customer); the audit is one
     month-keyed aggregate."""
-    import os as _os
-    import tempfile as _tempfile
-    import uuid as _uuid
-
     from ..functions.scalars import dsum
-    from ..sources.tables import load_table
+    from ..sources.tables import load_table, memo_key
 
-    key = _os.path.abspath(sf_dir)
+    key = memo_key(spark, sf_dir, "orders")
     if key not in _MUTATION_TABLE_MEMO:
         orders = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey").alias("order_id"),
@@ -228,11 +225,7 @@ def order_update_mutation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_totalprice").alias("total_amount"),
         )
         victim = orders.agg(F.min("customer_id")).collect()[0][0]
-        table = _os.path.join(
-            _tempfile.gettempdir(),
-            "spark_graft_mutation",
-            f"orders-{_uuid.uuid4().hex[:8]}",
-        )
+        table = scratch_dir("mutation", "orders")
         write_orders_table(orders, table)
         update_rows(
             spark,
@@ -291,8 +284,8 @@ def expire_ttl(spark: SparkSession, path: str, cutoff_ts: str) -> list[str]:
 
 
 # GDPR-audit memo: the partitioned copy + targeted delete build once per
-# (session, sf_dir); repeat calls audit the already-mutated table.
-_GDPR_TABLE_MEMO: dict[str, str] = {}
+# orders ``memo_key``; repeat calls audit the already-mutated table.
+_GDPR_TABLE_MEMO: dict[tuple, str] = {}
 
 
 def gdpr_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -308,14 +301,10 @@ def gdpr_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     subject's rows — bounded by orders-per-customer, NOT table size (the
     predicate pushes to the parquet scan to find them); the audit is one
     month-keyed aggregate."""
-    import os as _os
-    import tempfile as _tempfile
-    import uuid as _uuid
-
-    from ..sources.tables import load_table
+    from ..sources.tables import load_table, memo_key
     from ..functions.scalars import dsum
 
-    key = _os.path.abspath(sf_dir)
+    key = memo_key(spark, sf_dir, "orders")
     if key not in _GDPR_TABLE_MEMO:
         orders = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey").alias("order_id"),
@@ -324,11 +313,7 @@ def gdpr_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_totalprice").alias("total_amount"),
         )
         victim = orders.agg(F.min("customer_id")).collect()[0][0]
-        table = _os.path.join(
-            _tempfile.gettempdir(),
-            "spark_graft_gdpr",
-            f"orders-{_uuid.uuid4().hex[:8]}",
-        )
+        table = scratch_dir("gdpr", "orders")
         write_orders_table(orders, table)
         delete_rows(spark, table, f"customer_id = {victim}")
         _GDPR_TABLE_MEMO[key] = table
@@ -407,7 +392,7 @@ def expire_ttl_group_by(
     return touched
 
 
-_BACKFILL_TABLE_MEMO: dict[str, str] = {}
+_BACKFILL_TABLE_MEMO: dict[tuple, str] = {}
 
 
 def dynamic_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,15 +409,11 @@ def dynamic_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     Proof: the two earliest months are 'corrected' to doubled totals;
     the driver row must equal the oracle's piecewise recompute, and the
     pytest pins that untouched month dirs keep their files/mtime."""
-    import os as _os
-    import tempfile as _tempfile
-    import uuid as _uuid
-
     from ..functions.scalars import dsum
     from ..operators.normalize import with_partition_month
-    from ..sources.tables import load_table
+    from ..sources.tables import load_table, memo_key
 
-    key = _os.path.abspath(sf_dir)
+    key = memo_key(spark, sf_dir, "orders")
     if key not in _BACKFILL_TABLE_MEMO:
         orders = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey").alias("order_id"),
@@ -440,11 +421,7 @@ def dynamic_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").alias("order_timestamp"),
             F.col("o_totalprice").alias("total_amount"),
         )
-        table = _os.path.join(
-            _tempfile.gettempdir(),
-            "spark_graft_backfill",
-            f"orders-{_uuid.uuid4().hex[:8]}",
-        )
+        table = scratch_dir("backfill", "orders")
         write_orders_table(orders, table)
         months = [
             r["order_month"]
@@ -511,9 +488,9 @@ def move_partitions_to_volume(
     return touched
 
 
-# Tiering memo: the hot/cold pair builds + tiers once per (session,
-# sf_dir); repeat calls audit the already-tiered volumes.
-_TIER_TABLE_MEMO: dict[str, tuple[str, str]] = {}
+# Tiering memo: the hot/cold pair builds + tiers once per orders
+# ``memo_key``; repeat calls audit the already-tiered volumes.
+_TIER_TABLE_MEMO: dict[tuple, tuple[str, str]] = {}
 
 # Month-start cutoff so the boundary is exact: every pre-1999 month is
 # fully expired (moves whole), 199901+ fully hot.  Orders span
@@ -536,14 +513,10 @@ def ttl_move_tiering(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the move is one rename per expired partition (metadata-
     only, no data IO — the point of volume tiering at 100 TB); the audit
     is one month-keyed aggregate over a two-volume union scan."""
-    import os as _os
-    import tempfile as _tempfile
-    import uuid as _uuid
-
     from ..functions.scalars import dsum
-    from ..sources.tables import load_table
+    from ..sources.tables import load_table, memo_key
 
-    key = _os.path.abspath(sf_dir)
+    key = memo_key(spark, sf_dir, "orders")
     if key not in _TIER_TABLE_MEMO:
         orders = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey").alias("order_id"),
@@ -551,9 +524,7 @@ def ttl_move_tiering(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").alias("order_timestamp"),
             F.col("o_totalprice").alias("total_amount"),
         )
-        root = _os.path.join(
-            _tempfile.gettempdir(), "spark_graft_tiering", f"t-{_uuid.uuid4().hex[:8]}"
-        )
+        root = scratch_dir("tiering", "t")
         hot, cold = f"{root}/hot", f"{root}/cold"
         write_orders_table(orders, hot)
         moved = move_partitions_to_volume(spark, hot, cold, TIER_CUTOFF_TS)

@@ -22,10 +22,7 @@ key-bounded) rollup table and atomically swap directories.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +36,7 @@ from ..operators.rollups import (
     hourly_category_rollup_aggregate as hourly_rollup_aggregate,
     single_partition,
 )
+from ..operators._memo import scratch_dir
 from ..sources.tables import load_table, memo_key, prepared
 from ..storage import fs
 
@@ -133,29 +131,21 @@ def merge_rollup(
     return True
 
 
-# Session-lifetime scratch root for the incremental-rollup demo queries.
-# Each invocation materializes its rollup under a fresh uuid subdirectory
-# that OUTLIVES the function call, so the returned DataFrame stays a lazy
-# ``spark.read.parquet`` — no driver-side collect() in the query lineage
-# (round-2 verdict #3).  The whole root is swept once at process exit.
-# Per-PID root: the atexit sweep below must only ever delete THIS process's
-# scratch (a shared root let any exiting process — e.g. a pytest run ending
-# while bench.py streams — delete files under another process's live
-# FileStreamSource, killing its query with FileNotFound/basePath errors).
-_INC_ROLLUP_ROOT = os.path.join(
-    tempfile.gettempdir(), f"spark_graft_inc_rollups-{os.getpid()}"
-)
-
-
-@atexit.register
-def _sweep_inc_rollup_root() -> None:
-    shutil.rmtree(_INC_ROLLUP_ROOT, ignore_errors=True)
-
-
 def _fresh_rollup_dir(name: str) -> str:
-    d = os.path.join(_INC_ROLLUP_ROOT, f"{name}-{uuid.uuid4().hex[:8]}", name)
+    """A fresh ``<scratch>/<name>`` table dir for the incremental-rollup
+    demo queries, in its own scratch dir (created) so swap siblings stay
+    beside it.  The dir OUTLIVES the call, so the returned DataFrame stays
+    a lazy ``spark.read.parquet`` — no driver-side collect() in the query
+    lineage (round-2 verdict #3); the ``inc_rollups`` root goes at exit."""
+    d = os.path.join(scratch_dir("inc_rollups", name), name)
     os.makedirs(os.path.dirname(d), exist_ok=True)
     return d
+
+
+def _stream_run(prefix: str) -> tuple[str, str]:
+    """(checkpoint dir, query name) of one fresh streaming proof run."""
+    d = scratch_dir("inc_rollups", prefix)
+    return os.path.join(d, "ckpt"), os.path.basename(d).replace("-", "_")
 
 
 def incremental_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -754,8 +744,8 @@ def stream_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Deterministic replay source files, written once per (session, sf_dir):
-# events chunks keyed by sf_dir path, orders/acks pairs by ("ssjoin", path).
+# Deterministic replay source files, written once per (tag,) + the
+# ``memo_key`` of the table they copy, so a rewritten table is copied anew.
 _REPLAY_SRC_MEMO: dict = {}
 
 
@@ -777,10 +767,8 @@ def _replay_events_stream(spark: SparkSession, sf_dir: str, op, prefix: str) -> 
     streaming cost."""
     import datetime as _dt
 
-    run = uuid.uuid4().hex[:8]
-    d = os.path.join(_INC_ROLLUP_ROOT, f"{prefix}-{run}")
-    ckpt, name = os.path.join(d, "ckpt"), f"{prefix}_{run}"
-    key = os.path.abspath(sf_dir)
+    ckpt, name = _stream_run(prefix)
+    key = ("replay",) + memo_key(spark, sf_dir, "events")
     memo = _REPLAY_SRC_MEMO.get(key)
     src = memo["src"] if memo else None
     if src is None:
@@ -789,7 +777,7 @@ def _replay_events_stream(spark: SparkSession, sf_dir: str, op, prefix: str) -> 
         ).persist()  # each chunk write filters this one cached scan
         lo, hi = events.agg(F.min("ts"), F.max("ts")).collect()[0]
         mid = lo + ((hi - lo) or _dt.timedelta(seconds=1)) / 2
-        src = os.path.join(_INC_ROLLUP_ROOT, f"replay-src-{run}", "events")
+        src = os.path.join(scratch_dir("inc_rollups", "replay-src"), "events")
         try:
             for chunk in (
                 events.filter(F.col("ts") < F.lit(mid)),
@@ -855,9 +843,9 @@ def stream_windowed_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # Append-table memo for the time-travel query: versions must SURVIVE the
-# call (no vacuum), so the table builds once per (session, sf_dir) and
+# call (no vacuum), so the table builds once per events ``memo_key`` and
 # every read — current or historical — hits the stored log.
-_APPEND_TABLE_MEMO: dict[str, str] = {}
+_APPEND_TABLE_MEMO: dict[tuple, str] = {}
 
 
 def _build_txlog_append_table(spark: SparkSession, sf_dir: str) -> str:
@@ -866,7 +854,7 @@ def _build_txlog_append_table(spark: SparkSession, sf_dir: str) -> str:
     history stays readable."""
     from ..storage import txlog
 
-    key = os.path.abspath(sf_dir)
+    key = memo_key(spark, sf_dir, "events")
     if key not in _APPEND_TABLE_MEMO:
         events = load_table(spark, sf_dir, "events").persist()
         try:
@@ -905,7 +893,7 @@ def txlog_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of table size (the Delta RESTORE contract)."""
     from ..storage import txlog
 
-    key = os.path.abspath(sf_dir)
+    key = memo_key(spark, sf_dir, "events")
     if key not in _RESTORE_TABLE_MEMO:
         events = load_table(spark, sf_dir, "events").persist()
         try:
@@ -939,7 +927,7 @@ def txlog_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RESTORE_TABLE_MEMO: dict[str, str] = {}
+_RESTORE_TABLE_MEMO: dict[tuple, str] = {}
 
 
 def table_parts_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1082,15 +1070,13 @@ def stream_join_orders_acks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("ack_timestamp"),
         F.lit("ok").alias("ack_status"),
     )
-    run = uuid.uuid4().hex[:8]
-    d = os.path.join(_INC_ROLLUP_ROOT, f"ssjoin-{run}")
-    ckpt, name = os.path.join(d, "ckpt"), f"ssjoin_{run}"
-    # Deterministic source files write once per (session, sf_dir); the
+    ckpt, name = _stream_run("ssjoin")
+    # Deterministic source files write once per orders ``memo_key``; the
     # stream (checkpoint, join state, sink) runs fresh every call.
-    key = ("ssjoin", os.path.abspath(sf_dir))
+    key = ("ssjoin",) + memo_key(spark, sf_dir, "orders")
     if key not in _REPLAY_SRC_MEMO:
-        o_src = os.path.join(_INC_ROLLUP_ROOT, f"ssjoin-src-{run}", "orders")
-        a_src = os.path.join(_INC_ROLLUP_ROOT, f"ssjoin-src-{run}", "acks")
+        src = scratch_dir("inc_rollups", "ssjoin-src")
+        o_src, a_src = os.path.join(src, "orders"), os.path.join(src, "acks")
         orders.coalesce(1).write.parquet(o_src)
         acks.coalesce(1).write.parquet(a_src)
         _REPLAY_SRC_MEMO[key] = (o_src, a_src)
@@ -1123,8 +1109,8 @@ def stream_join_orders_acks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Time-chunked append table for the zone-map skipping proof: (path, b1, b2)
-# per (session, sf_dir), where [b1, b2) is the second epoch-hour quarter.
-_PRUNED_TABLE_MEMO: dict[str, tuple[str, int, int]] = {}
+# per events ``memo_key``, where [b1, b2) is the second epoch-hour quarter.
+_PRUNED_TABLE_MEMO: dict[tuple, tuple[str, int, int]] = {}
 
 
 def _build_time_chunked_txlog(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
@@ -1134,7 +1120,7 @@ def _build_time_chunked_txlog(spark: SparkSession, sf_dir: str) -> tuple[str, in
     overlap in time, so their zone maps overlap too)."""
     from ..storage import txlog
 
-    key = os.path.abspath(sf_dir)
+    key = memo_key(spark, sf_dir, "events")
     if key not in _PRUNED_TABLE_MEMO:
         agg = hourly_rollup_aggregate(load_table(spark, sf_dir, "events")).withColumn(
             "hour_epoch", F.expr("unix_seconds(hour) DIV 3600")
@@ -1251,8 +1237,8 @@ def explain_estimate_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Z-ordered orders txlog per (session-run, sf_dir): table path memo.
-_ZORDER_TABLE_MEMO: dict[str, str] = {}
+# Z-ordered orders txlog per orders ``memo_key``: table path memo.
+_ZORDER_TABLE_MEMO: dict[tuple, str] = {}
 
 # Fixed predicate windows (absolute, so the oracle is plain SQL at any
 # SF): a low-custkey slice x a mid-price band.  Non-empty from sf0.001 up.
@@ -1268,7 +1254,7 @@ def _build_zorder_txlog(spark: SparkSession, sf_dir: str) -> str:
     both columns."""
     from ..storage import txlog
 
-    key = os.path.abspath(sf_dir)
+    key = memo_key(spark, sf_dir, "orders")
     if key not in _ZORDER_TABLE_MEMO:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
@@ -1337,10 +1323,8 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     afford (a global dropDuplicates would hold every id ever seen)."""
     import datetime as _dt
 
-    run = uuid.uuid4().hex[:8]
-    d = os.path.join(_INC_ROLLUP_ROOT, f"sdedup-{run}")
-    ckpt, name = os.path.join(d, "ckpt"), f"sdedup_{run}"
-    key = ("sdedup", os.path.abspath(sf_dir))
+    ckpt, name = _stream_run("sdedup")
+    key = ("sdedup",) + memo_key(spark, sf_dir, "events")
     if key not in _REPLAY_SRC_MEMO:
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "value"
@@ -1349,7 +1333,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_dupes = events.unionByName(dupes)
         lo, hi = events.agg(F.min("ts"), F.max("ts")).collect()[0]
         mid = lo + ((hi - lo) or _dt.timedelta(seconds=1)) / 2
-        src = os.path.join(_INC_ROLLUP_ROOT, f"sdedup-src-{run}", "events")
+        src = os.path.join(scratch_dir("inc_rollups", "sdedup-src"), "events")
         try:
             for chunk in (
                 with_dupes.filter(F.col("ts") < F.lit(mid)),
@@ -1488,18 +1472,16 @@ def running_totals_tws(events: DataFrame) -> DataFrame:
 
 
 def _events_2chunk_src(spark: SparkSession, sf_dir: str) -> str:
-    """events written once per (session, sf_dir) as 2 deterministic chunk
+    """events written once per events ``memo_key`` as 2 deterministic chunk
     files (event_id mod 2) — the replay source for cross-batch state
     proofs (membership the oracle can reproduce, unlike a timestamp
     midpoint)."""
-    key = ("twschunks", os.path.abspath(sf_dir))
+    key = ("twschunks",) + memo_key(spark, sf_dir, "events")
     if key not in _REPLAY_SRC_MEMO:
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "value"
         ).persist()
-        src = os.path.join(
-            _INC_ROLLUP_ROOT, f"tws-src-{uuid.uuid4().hex[:8]}", "events"
-        )
+        src = os.path.join(scratch_dir("inc_rollups", "tws-src"), "events")
         try:
             for i in (0, 1):
                 events.filter(F.pmod(F.col("event_id"), F.lit(2)) == i).coalesce(
@@ -1526,9 +1508,7 @@ def statestore_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum) so cross-batch accumulation order cannot smear the hash.  At
     scale the state read is partition-parallel (one task per state store
     partition), no driver materialization."""
-    run = uuid.uuid4().hex[:8]
-    d = os.path.join(_INC_ROLLUP_ROOT, f"ssi-{run}")
-    ckpt, name = os.path.join(d, "ckpt"), f"ssi_{run}"
+    ckpt, name = _stream_run("ssi")
     src = _events_2chunk_src(spark, sf_dir)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).option(
@@ -1574,9 +1554,7 @@ def stream_running_totals_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     state handoff is what the equality proves.  transformWithState
     requires the RocksDB state store; the conf is set for this stream's
     start and restored after (provider choice binds at query start)."""
-    run = uuid.uuid4().hex[:8]
-    d = os.path.join(_INC_ROLLUP_ROOT, f"tws-{run}")
-    ckpt, name = os.path.join(d, "ckpt"), f"tws_{run}"
+    ckpt, name = _stream_run("tws")
     src = _events_2chunk_src(spark, sf_dir)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).option(
@@ -2133,8 +2111,8 @@ def txlog_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # User-range-chunked append table for the bloom-skipping proof: (path,
-# probe_user) per (session, sf_dir).
-_BLOOM_TABLE_MEMO: dict[str, tuple[str, int]] = {}
+# probe_user) per events ``memo_key``.
+_BLOOM_TABLE_MEMO: dict[tuple, tuple[str, int]] = {}
 
 
 def _build_user_chunked_txlog(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
@@ -2143,7 +2121,7 @@ def _build_user_chunked_txlog(spark: SparkSession, sf_dir: str) -> tuple[str, in
     probe has something to skip) with a user_id bloom per directory."""
     from ..storage import txlog
 
-    key = os.path.abspath(sf_dir)
+    key = memo_key(spark, sf_dir, "events")
     if key not in _BLOOM_TABLE_MEMO:
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "value"
@@ -2328,17 +2306,15 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     its batch alone, which is why the emitted set equals the batch join
     exactly.  The dimension is broadcast; the stream side never
     shuffles."""
-    run = uuid.uuid4().hex[:8]
-    d = os.path.join(_INC_ROLLUP_ROOT, f"senrich-{run}")
-    ckpt, name = os.path.join(d, "ckpt"), f"senrich_{run}"
+    ckpt, name = _stream_run("senrich")
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("order_id"),
         "o_custkey",
         F.col("o_totalprice").alias("total_amount"),
     )
-    key = ("senrich", os.path.abspath(sf_dir))
+    key = ("senrich",) + memo_key(spark, sf_dir, "orders")
     if key not in _REPLAY_SRC_MEMO:
-        src = os.path.join(_INC_ROLLUP_ROOT, f"senrich-src-{run}", "orders")
+        src = os.path.join(scratch_dir("inc_rollups", "senrich-src"), "orders")
         for i in (0, 1):
             orders.filter(F.pmod(F.col("order_id"), F.lit(2)) == i).coalesce(
                 1
@@ -2505,16 +2481,14 @@ def stream_join_orders_acks_outer(spark: SparkSession, sf_dir: str) -> DataFrame
         .alias("ack_timestamp"),
         F.lit("ok").alias("ack_status"),
     )
-    run = uuid.uuid4().hex[:8]
-    d = os.path.join(_INC_ROLLUP_ROOT, f"ssjoino-{run}")
-    ckpt, name = os.path.join(d, "ckpt"), f"ssjoino_{run}"
-    key = ("ssjoino", os.path.abspath(sf_dir))
+    ckpt, name = _stream_run("ssjoino")
+    key = ("ssjoino",) + memo_key(spark, sf_dir, "orders")
     if key not in _REPLAY_SRC_MEMO:
         far = orders.agg(
             (F.max("order_timestamp") + F.expr("INTERVAL 30 DAYS")).alias("t")
         ).collect()[0]["t"]
-        o_src = os.path.join(_INC_ROLLUP_ROOT, f"ssjoino-src-{run}", "orders")
-        a_src = os.path.join(_INC_ROLLUP_ROOT, f"ssjoino-src-{run}", "acks")
+        src = scratch_dir("inc_rollups", "ssjoino-src")
+        o_src, a_src = os.path.join(src, "orders"), os.path.join(src, "acks")
         orders.coalesce(1).write.parquet(o_src)
         acks.coalesce(1).write.parquet(a_src)
         sentinel_o = spark.createDataFrame(

@@ -173,16 +173,15 @@ def test_lsh_band_autotune_sig_join_is_equi(spark, queries):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
 
 
-def test_restore_tx_preserves_history_and_batch_idempotency(spark):
+def test_restore_tx_preserves_history_and_batch_idempotency(spark, tmp_path):
     """restore_tx: rollback is a NEW commit (history intact, old versions
     readable), re-publishes the restored dirs verbatim, and resumes the
     restored snapshot's last_merged_batch so a replay of a rolled-back
     batch re-applies."""
-    import tempfile, uuid
     from pyspark.sql import functions as F
     from realtime_analytics_with_kafka_clickhouse_spark.storage import txlog
 
-    table = f"{tempfile.gettempdir()}/spark_graft_restore_t/{uuid.uuid4().hex[:8]}"
+    table = str(tmp_path / "restore_t")
     for i in range(3):
         df = spark.range(i * 10, i * 10 + 10).select(
             F.col("id"), F.lit(i).alias("epoch")
@@ -285,24 +284,22 @@ def test_broadcast_if_small_empty_frame(spark):
     assert left.join(gated, "k").count() == 0
 
 
-def test_restore_tx_rejects_missing_version(spark):
-    import tempfile, uuid
+def test_restore_tx_rejects_missing_version(spark, tmp_path):
     import pytest as _pytest
     from pyspark.sql import functions as F
     from realtime_analytics_with_kafka_clickhouse_spark.storage import txlog
 
-    table = f"{tempfile.gettempdir()}/spark_graft_restore_t/{uuid.uuid4().hex[:8]}"
+    table = str(tmp_path / "restore_t")
     df = spark.range(0, 5).select(F.col("id"), F.lit(0).alias("epoch"))
     assert txlog.append_tx(spark, table, df, batch_id=0)
     with _pytest.raises(ValueError):
         txlog.restore_tx(spark, table, 7)
 
 
-def test_move_partitions_to_volume_idempotent(spark):
+def test_move_partitions_to_volume_idempotent(spark, tmp_path):
     """A second tiering pass over an already-tiered hot volume finds no
     expired partitions left — the move is naturally idempotent, and the
     union of volumes still conserves every row."""
-    import tempfile, uuid
     from pyspark.sql import functions as F
     from realtime_analytics_with_kafka_clickhouse_spark.sources.tables import load_table
     from realtime_analytics_with_kafka_clickhouse_spark.storage.layout import (
@@ -316,7 +313,7 @@ def test_move_partitions_to_volume_idempotent(spark):
         F.col("o_orderdate").alias("order_timestamp"),
         F.col("o_totalprice").alias("total_amount"),
     )
-    root = f"{tempfile.gettempdir()}/spark_graft_tier_t/{uuid.uuid4().hex[:8]}"
+    root = str(tmp_path)
     hot, cold = f"{root}/hot", f"{root}/cold"
     write_orders_table(orders, hot)
     n_total = orders.count()

@@ -103,7 +103,7 @@ def test_distinct_agg_battery_integer_avg(spark, queries):
         assert got["n_distinct_values"] == n
 
 
-def test_ivf_incremental_replay_noop_and_pruning(spark):
+def test_ivf_incremental_replay_noop_and_pruning(spark, tmp_path):
     """The incremental-IVF lifecycle invariants: (1) replaying the ingest
     batch id is a committed NO-OP (snapshot version and row count
     unchanged); (2) the arrival-ordered append breaks cell-range pruning
@@ -122,17 +122,13 @@ def test_ivf_incremental_replay_noop_and_pruning(spark):
     )
     from realtime_analytics_with_kafka_clickhouse_spark.storage import txlog
 
-    import tempfile, uuid, os
-
     sf_dir = SF_DIR
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     assigned = _with_ranked_cells(emb, _kmeans_fit(spark, sf_dir)).select(
         "vec_id", F.element_at("ranked", 1)["c"].alias("cluster"), "embedding"
     )
     is_batch = F.col("vec_id") % IVF_INGEST_MOD == 0
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_ivf_index", f"t-{uuid.uuid4().hex[:8]}"
-    )
+    table = str(tmp_path / "ivf_index")
     bounds = [KMEANS_K * i // 4 for i in range(5)]
     bounds[4] = KMEANS_K
     for i in range(4):
@@ -247,7 +243,7 @@ def test_url_battery_map_only(spark, queries):
     assert r["p_param"] == "3" and r["fragment"] == "s0"
 
 
-def test_ivf_delete_applies_tombstones_physically(spark):
+def test_ivf_delete_applies_tombstones_physically(spark, tmp_path):
     """The delete-applying ranged OPTIMIZE: post-compact the index holds
     zero victim rows and zero tombstone rows, total = corpus - victims,
     the tombstone replay is a committed no-op, a one-cell probe lists one
@@ -267,8 +263,6 @@ def test_ivf_delete_applies_tombstones_physically(spark):
     )
     from realtime_analytics_with_kafka_clickhouse_spark.storage import txlog
 
-    import os, tempfile, uuid
-
     emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
     assigned = _with_ranked_cells(emb, _kmeans_fit(spark, SF_DIR)).select(
         "vec_id", F.element_at("ranked", 1)["c"].alias("cluster"), "embedding"
@@ -277,9 +271,7 @@ def test_ivf_delete_applies_tombstones_physically(spark):
     n_total = emb.count()
     n_victims = emb.filter(is_victim).count()
     assert 0 < n_victims < n_total  # both branches real on the fixture
-    table = os.path.join(
-        tempfile.gettempdir(), "spark_graft_ivf_index", f"dt-{uuid.uuid4().hex[:8]}"
-    )
+    table = str(tmp_path / "ivf_index")
     bounds = [KMEANS_K * i // 4 for i in range(5)]
     bounds[4] = KMEANS_K
     base = assigned.withColumn("deleted", F.lit(False))
@@ -434,13 +426,11 @@ def test_optimize_deduplicate_shrinks_and_restores(spark):
     assert expect.exceptAll(out).count() == 0
 
 
-def test_stream_ivf_ingest_restart_noop(spark):
+def test_stream_ivf_ingest_restart_noop(spark, tmp_path):
     """Exactly-once index maintenance from an at-least-once stream: after
     the availableNow stream drains, re-starting it on the same source +
     checkpoint commits NOTHING new (no new epochs to process), and a
     manual replay of a drained epoch id is refused by the txlog."""
-    import os, tempfile, uuid
-
     from pyspark.sql import functions as F
 
     from realtime_analytics_with_kafka_clickhouse_spark.operators.similarity import (
@@ -452,11 +442,7 @@ def test_stream_ivf_ingest_restart_noop(spark):
     )
     from realtime_analytics_with_kafka_clickhouse_spark.storage import txlog
 
-    run = uuid.uuid4().hex[:8]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_ivf_stream")
-    src = os.path.join(root, f"tsrc-{run}")
-    ckpt = os.path.join(root, f"tckpt-{run}")
-    table = os.path.join(root, f"tidx-{run}")
+    src, ckpt, table = (str(tmp_path / d) for d in ("tsrc", "tckpt", "tidx"))
     emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
     for half in (0, 1):
         emb.filter(F.pmod("vec_id", F.lit(2)) == half).coalesce(1).write.mode(
