@@ -43,10 +43,14 @@ _MISS = object()
 def path_fingerprint(filesystem, fs_path: str) -> tuple:
     """(max mtime_ns, total bytes) over the file at ``fs_path``, or over
     every file below it when it is a directory: a metadata-only identity
-    that changes when the data is rewritten at the same path."""
+    that changes when the data is rewritten at the same path.  Raises
+    ``FileNotFoundError`` for a missing path, which has no identity: every
+    missing path would share the fingerprint (0, 0)."""
     from pyarrow import fs as pafs
 
     info = filesystem.get_file_info(fs_path)
+    if info.type == pafs.FileType.NotFound:
+        raise FileNotFoundError(fs_path)
     if info.type == pafs.FileType.Directory:
         infos = [
             i
@@ -61,17 +65,24 @@ def path_fingerprint(filesystem, fs_path: str) -> tuple:
     )
 
 
+def absolute(path: str) -> str:
+    """``path`` itself when it is a URI, else made absolute: a relative
+    path has no URI scheme, so ``FileSystem.from_uri`` rejects it, and it
+    names another directory after a ``chdir``."""
+    return path if "://" in path else os.path.abspath(path)
+
+
 def table_fingerprint(sf_dir: str, table: str) -> tuple:
     """``path_fingerprint`` of the table's parquet file(s)."""
     from pyarrow import fs as pafs
 
     return path_fingerprint(
-        *pafs.FileSystem.from_uri(os.path.join(sf_dir, f"{table}.parquet"))
+        *pafs.FileSystem.from_uri(os.path.join(absolute(sf_dir), f"{table}.parquet"))
     )
 
 
 def _key(kind: str, sf_dir: str, tables: tuple[str, ...]) -> tuple:
-    return (kind, sf_dir, tuple(table_fingerprint(sf_dir, t) for t in tables))
+    return (kind, absolute(sf_dir), tuple(table_fingerprint(sf_dir, t) for t in tables))
 
 
 def memo_peek(kind: str, sf_dir: str, tables: tuple[str, ...]) -> Any:

@@ -21,19 +21,23 @@ The five dashboard panels (``global_totals``, ``category_revenue_share``,
 ``pipeline.hourly_trend_from_rollup``) are re-run on every dashboard
 refresh, so two rules make a repeat call cheap:
 
-* Prepared plans.  A panel's first call builds and analyses its DataFrame
+* Prepared plans.  A panel's first call builds its DataFrame, plans it
   and keeps it in the session's fingerprint-keyed memo
-  (``sources.tables.prepared``); every call returns a fresh Dataset over
-  that analysed plan, so each refresh optimises, plans and scans anew but
-  skips the Python-side build (100–320 py4j calls per panel) and the
-  analysis.  A rewritten table or a new session time zone builds a new
-  plan.
+  (``sources.tables.prepared``).  A plan with no exchange (shuffle or
+  broadcast) and no subquery is held: every call returns that Dataset, so
+  each refresh runs a new job that scans the input again over the
+  already optimised, planned and code-generated plan.  Any other plan gets
+  a fresh Dataset over its analysed plan per call, which optimises and
+  plans anew but still skips the Python-side build (100–320 py4j calls per
+  panel) and the analysis.  A rewritten table or a new session time zone
+  builds a new plan; nothing else does, so a held plan keeps the optimizer
+  and planner confs of its first call.
 * One-task plans.  When Spark plans the panel's input scan (``events``,
   or the stored rollup) as a single partition, the panel ``coalesce(1)``s
   it before its aggregates (``single_partition``, asked once per prepared
-  plan): one job, one stage, one task, no Exchange.  A multi-partition
-  input (every table at 100 TB) keeps the partial-aggregate exchange plan
-  above.
+  plan): one job, one stage, one task, no Exchange, so the plan is held.
+  A multi-partition input (every table at 100 TB) keeps the
+  partial-aggregate exchange plan above and a fresh execution per call.
 """
 
 from __future__ import annotations

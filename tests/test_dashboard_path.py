@@ -1,10 +1,12 @@
-"""The dashboard panels' serving path: prepared plans (a fresh Dataset over
-one memoized, analysed plan per call) and one-task plans over a
-one-partition input scan."""
+"""The dashboard panels' serving path: prepared plans (the memoized,
+already-executed plan when it has no exchange and no subquery, else a
+fresh Dataset over the memoized analysed plan per call) and one-task plans
+over a one-partition input scan."""
 
 from __future__ import annotations
 
 import itertools
+import threading
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -12,16 +14,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from realtime_analytics_with_kafka_clickhouse_spark.operators import rollups
+from realtime_analytics_with_kafka_clickhouse_spark.oracle import ORACLE
 from realtime_analytics_with_kafka_clickhouse_spark.plans.inspect import (
     count_shuffles,
     pushed_filters,
+    simple_plan,
 )
 from realtime_analytics_with_kafka_clickhouse_spark.sources import tables
 from realtime_analytics_with_kafka_clickhouse_spark.streaming.pipeline import (
     hourly_trend_from_rollup,
 )
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_DIR_ORACLE
+from tests.oracle_check import compare, duck_con
 
 EVENT_PANELS = {
     "global_totals": rollups.global_totals,
@@ -30,6 +35,9 @@ EVENT_PANELS = {
     "hourly_trend": rollups.hourly_trend,
 }
 PANELS = {**EVENT_PANELS, "hourly_trend_from_rollup": hourly_trend_from_rollup}
+# The stored rollup's layout does not follow the events files, so the
+# stored-rollup panel runs on the one-partition input only.
+CALL_CASES = [(n, False) for n in sorted(PANELS)] + [(n, True) for n in sorted(EVENT_PANELS)]
 
 _groups = itertools.count()
 
@@ -110,19 +118,17 @@ def test_multi_partition_scan_keeps_the_exchange_plan(spark, tmp_path, name):
     assert _sorted_rows(got) == _sorted_rows(want)
 
 
-# The stored rollup's layout does not follow the events files, so the
-# stored-rollup panel runs on the one-partition input only.
-@pytest.mark.parametrize(
-    "name,multi_file",
-    [(n, False) for n in sorted(PANELS)] + [(n, True) for n in sorted(EVENT_PANELS)],
-)
+@pytest.mark.parametrize("name,multi_file", CALL_CASES)
 def test_every_call_rescans_its_input(spark, tmp_path, name, multi_file):
-    """Two consecutive calls each read every input row: each call is a new
-    execution, never a re-collect of the memoized Dataset (that would skip
-    the scan and serve the first call's shuffle output).  A one-task plan
-    skips no stage; under AQE an exchange plan runs each shuffle-map stage
-    as its own job, and later jobs of the same call list it as skipped, so
-    there both calls must show the same stages run and skipped."""
+    """Two consecutive calls each read every input row: each call runs a
+    new job.  A held plan (no exchange, no subquery) is re-collected, and
+    with no shuffle-map stage to skip its one stage scans the input again;
+    an exchange plan gets a new execution, never a re-collect (that would
+    skip the scan and serve the first call's shuffle output).  A one-task
+    plan skips no stage; under AQE an exchange plan runs each shuffle-map
+    stage as its own job, and later jobs of the same call list it as
+    skipped, so there both calls must show the same stages run and
+    skipped."""
     sf = _multi_file_events(tmp_path) if multi_file else SF_DIR
     panel = PANELS[name]
     panel(spark, sf).collect()  # first call: prepares the plan (and the stored rollup)
@@ -178,3 +184,82 @@ def test_session_time_zone_is_part_of_the_memo_key(spark):
             assert _sorted_rows(got) == want, panel.__name__
     finally:
         spark.conf.set(conf, before)
+
+
+def _query_execution(df):
+    return df._jdf.queryExecution()
+
+
+@pytest.mark.parametrize("name,multi_file", CALL_CASES)
+def test_only_exchange_free_plans_are_held(spark, tmp_path, name, multi_file):
+    """A one-partition panel returns its memoized, already-executed plan on
+    every call (no re-optimisation); an exchange plan gets a new
+    QueryExecution on every call."""
+    sf = _multi_file_events(tmp_path) if multi_file else SF_DIR
+    panel = PANELS[name]
+    first = panel(spark, sf)
+    first.collect()
+    again = panel(spark, sf)
+    same = _query_execution(again).equals(_query_execution(first))
+    assert same is not multi_file
+
+
+def _broadcast_join(spark, sf_dir):
+    users = spark.range(3).withColumnRenamed("id", "user_id")
+    return rollups._panel_events(spark, sf_dir).join(F.broadcast(users), "user_id")
+
+
+def _scalar_subquery(spark, sf_dir):
+    threshold = spark.range(1).select(F.lit(0.5).alias("t")).scalar()
+    return rollups._panel_events(spark, sf_dir).filter(F.col("value") > threshold)
+
+
+@pytest.mark.parametrize(
+    "build,node,absent",
+    [(_broadcast_join, "BroadcastExchange", "Subquery"), (_scalar_subquery, "Subquery", "Exchange")],
+)
+def test_broadcast_and_subquery_plans_are_not_held(spark, build, node, absent):
+    """A plan whose only stateful node is a broadcast exchange or a
+    subquery (each keeps its first result) gets a fresh Dataset per call."""
+    def call():
+        return tables.prepared(
+            spark, SF_DIR, "events", f"test_{build.__name__}", lambda: build(spark, SF_DIR)
+        )
+
+    first = call()
+    assert count_shuffles(first) == 0
+    plan = simple_plan(first)
+    assert node in plan and absent not in plan
+    rows = _sorted_rows(first.collect())
+    again = call()
+    assert not _query_execution(again).equals(_query_execution(first))
+    assert _sorted_rows(again.collect()) == rows == _sorted_rows(build(spark, SF_DIR).collect())
+
+
+@pytest.mark.parametrize("name", sorted(PANELS))
+def test_held_plan_serves_concurrent_callers(spark, name):
+    """Two threads collecting the same held panel 5x each get the DuckDB
+    oracle's rows every time."""
+    panel = PANELS[name]
+    held = panel(spark, SF_DIR_ORACLE)
+    held.collect()
+    assert panel(spark, SF_DIR_ORACLE) is held
+    problems: list[str] = []
+
+    def client() -> None:
+        con = duck_con(SF_DIR_ORACLE)
+        try:
+            for i in range(5):
+                problems.extend(compare(panel(spark, SF_DIR_ORACLE), con, ORACLE[name], f"{name}#{i}"))
+        except Exception as e:  # surface a thread's error in the test
+            problems.append(repr(e))
+        finally:
+            con.close()
+
+    threads = [threading.Thread(target=client) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert problems == []

@@ -91,6 +91,42 @@ def test_exact_ann_ground_truth_is_memoized(spark):
     assert not _memo.is_miss(l2) and l2["n_pairs"] > 0
 
 
+def test_relative_sf_dir_keeps_the_memo(spark, tmp_path):
+    """A relative table dir (``--sf-dir sf``) has the memo key of its
+    absolute path, so the memos hit instead of building on every call."""
+    from realtime_analytics_with_kafka_clickhouse_spark.sources import tables
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copyfile(f"{SF_DIR}/events.parquet", sf / "events.parquet")
+    absolute, relative = str(sf), os.path.relpath(sf)
+    key = tables.memo_key(spark, absolute, "events")
+    for d in (relative, os.path.join(".", relative)):
+        assert tables.memo_key(spark, d, "events") == key
+    first = tables.load_table(spark, relative, "events")
+    assert tables.load_table(spark, relative, "events") is first
+    assert tables.load_table(spark, absolute, "events") is first
+    calls = []
+    for d in (relative, absolute):
+        _memo.memo_get("t_relative", d, ("events",), lambda: calls.append(d))
+    assert calls == [relative]
+
+
+def test_missing_table_is_never_memoized(spark, tmp_path):
+    """A missing table has no fingerprint: planted frames behind a fake dir
+    (absolute or relative) must never be served to the next caller."""
+    from realtime_analytics_with_kafka_clickhouse_spark.sources import tables
+
+    for d in (str(tmp_path / "missing"), "missing"):
+        with pytest.raises(FileNotFoundError):
+            tables.memo_key(spark, d, "events")
+        calls = []
+        for value in ("first", "second"):
+            got = _memo.memo_get("t_missing", d, ("events",), lambda: calls.append(value) or value)
+            assert got == value
+        assert calls == ["first", "second"]
+
+
 def _double_column(path: str, column: str) -> None:
     t = pq.read_table(path)
     i = t.schema.get_field_index(column)
