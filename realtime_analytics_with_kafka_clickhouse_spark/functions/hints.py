@@ -81,6 +81,14 @@ def runtime_broadcast(df: DataFrame) -> DataFrame:
 # an 8 GB driver, far outside any sane per-request batch.
 REQUEST_BATCH_ROW_LIMIT = 100_000
 
+# Byte cap for the executor-side corpus slot (``similarity._corpus``): the
+# raw float64 matrix plus its derived views, held by EVERY Python worker,
+# and a host runs one worker per task slot.  1 GiB x 8 cores still fits a
+# 16 GB host beside the JVM; sf0.1's full slot is gated at 5.1 MB (2000 x
+# 64 cells x 8 B x (raw + 4 views)), ~200x under it.  Past the cap the
+# brute-force kernels must give way to the partition-local IVF paths.
+EXECUTOR_CORPUS_BYTE_LIMIT = 1 << 30
+
 
 def collect_request_sized(
     df: DataFrame, cap: int = REQUEST_BATCH_ROW_LIMIT, what: str = "query batch"

@@ -18,6 +18,19 @@ tiebreak — so results are bit-stable across engines and parallelism.
 Hyperplanes are md5-derived ±1 components (functions.hashing), so the
 oracle re-derives the same planes; a production deployment would precompute
 the plane matrix once and broadcast it.
+
+Executor-side kernels share two mechanisms:
+
+- One corpus slot (``_corpus``): each Python worker reads
+  ``embeddings.parquet`` once into one raw float64 matrix and derives the
+  unit, int8, norm and random-projection views from it lazily, in the
+  same slot.  A rewrite of the file drops the whole slot, and a corpus
+  whose slot would pass ``hints.EXECUTOR_CORPUS_BYTE_LIMIT`` fails before
+  any read.
+- One left-fold kernel (``_lfold``): every numpy sum that feeds a
+  cross-engine rank or candidate boundary adds one term per dimension in
+  index order, the association of the Catalyst ``F.aggregate`` folds and
+  the DuckDB oracles, so the sums agree bit for bit.
 """
 
 from __future__ import annotations
@@ -25,16 +38,18 @@ from __future__ import annotations
 import math
 import os
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import hints
 from ..functions.hints import (
     broadcast_if_small,
     collect_request_sized,
     runtime_broadcast,
 )
 from ..sources.tables import load_table, memo_key
-from ._memo import path_fingerprint, scratch_dir, scratch_persist
+from ._memo import absolute, path_fingerprint, scratch_dir, scratch_persist
 
 DIM = 64
 TOP_K = 5
@@ -53,65 +68,134 @@ def n_lsh_planes(n_vectors: int) -> int:
     return max(MIN_LSH_PLANES, math.ceil(math.log2(n_vectors / TARGET_BUCKET_OCCUPANCY)))
 
 
-# Executor-side memo for the ANN candidate matrix: one load + normalize per
-# python worker process (workers are reused across tasks), not one per task.
-# Keyed by (kind, path, fingerprint): the fingerprint (mtime + total size of
-# the parquet files) invalidates stale vectors when the file is rewritten at
-# the same path in a long-lived worker, and the float64 / int8 kinds each
-# get one slot so the two ANN paths don't evict each other every task wave
-# (round-3 advice).  One entry per kind bounds executor memory.
-_CAND_CACHE: dict = {}
+# The executor's one corpus slot, {(absolute path, fingerprint): views}:
+# reused Python workers read the corpus once per file state, not once per
+# task.  A rewrite at the same path changes the fingerprint (max mtime +
+# total size) and a new key evicts the old slot, so a worker holds one
+# corpus: ``ids``, ``raw`` (float64) and each ``_VIEWS`` entry an op has
+# asked for, derived once from that one ``raw``.
+_CORPUS: dict = {}
 
 
-def _cand_cache_get(kind: str, path: str, load):
-    """Fetch-or-load with per-kind single-slot eviction."""
-    import pyarrow.parquet as pq  # noqa: F401
+def _lfold(term, n: int):
+    """The left-fold kernel: ``((0.0 + term(0)) + term(1)) + ... +
+    term(n - 1)``, one IEEE add per index in index order.  numpy's matmul
+    and ``sum`` add pairwise; every sum that feeds a cross-engine rank or
+    candidate boundary comes from here instead, in the association of the
+    Catalyst ``F.aggregate`` folds and the oracles' unrolled chains, so
+    the sums agree bit for bit.  Terms are floats or same-shape arrays."""
+    acc = 0.0 + term(0) if n else 0.0
+    for j in range(1, n):
+        acc += term(j)
+    return acc
+
+
+def _norms(x):
+    """Row L2 norms of the matrix ``x``, squares left-folded."""
+    return np.sqrt(_lfold(lambda j: x[:, j] * x[:, j], x.shape[1]))
+
+
+def _sq_dists(x, c):
+    """Squared L2 distance of every row of ``x`` to the point ``c``."""
+
+    def term(d):
+        diff = x[:, d] - c[d]
+        return diff * diff
+
+    return _lfold(term, len(c))
+
+
+def _matrix(col, where: str):
+    """float64 (rows, width) matrix of an Arrow ``list<float>`` column via
+    one flatten (float32 -> float64 is exact).  A null row or component,
+    or rows of unequal width (a reshape would misalign them), raise a
+    ``ValueError`` naming ``where``."""
+    import pyarrow.compute as pc
+
+    flat = pc.list_flatten(col)
+    if col.null_count or flat.null_count:
+        raise ValueError(f"{where}: null embedding or embedding component")
+    widths = pc.min_max(pc.list_value_length(col)).as_py()
+    if widths["min"] != widths["max"]:
+        raise ValueError(f"{where}: embedding widths differ ({widths})")
+    return flat.to_numpy().astype(np.float64).reshape(len(col), widths["max"] or 0)
+
+
+def _int8_view(raw):
+    """(codes, scales), symmetric max-abs/127: elementwise IEEE ops only
+    (abs, max, one divide, +0.5, floor), so every engine derives the same
+    codes.  They fit int8 but are held as int64 so the integer matmul
+    cannot overflow: the view is as large as the float64 matrix."""
+    scale = np.maximum(np.abs(raw).max(axis=1), 1e-30) / 127.0
+    return np.floor(raw / scale[:, None] + 0.5).astype(np.int64), scale
+
+
+def _rp_view(x, planes):
+    """(proj, proj norms) of ``x`` on the ±1 ``planes`` over sqrt(#planes),
+    each component left-folded (a matmul drifts ~1e-16 at the candidate
+    cut); serves the corpus view and the query side alike."""
+    planes = np.asarray(planes, dtype=np.float64)
+    proj = np.empty((len(x), len(planes)))
+    for p, plane in enumerate(planes):
+        proj[:, p] = _lfold(lambda j: plane[j] * x[:, j], x.shape[1]) / np.sqrt(
+            float(len(planes))
+        )
+    return proj, _norms(proj)
+
+
+_VIEWS = {
+    "unit": lambda raw: raw / np.linalg.norm(raw, axis=1, keepdims=True),
+    "int8": _int8_view,
+    "norm": _norms,
+    "rp": lambda raw: _rp_view(raw, _rp_matrix(RP_TOPK_DIM)),
+}
+
+
+def _corpus(path: str, *views: str) -> dict:
+    """The corpus slot for ``path``, holding ``ids``, ``raw`` and each
+    named ``_VIEWS`` entry: the file is read on a miss, each missing view
+    derived once.  First the slot's resident bytes — rows x width x 8 B
+    (from the parquet footers on a miss) x (raw + views) — are checked
+    against ``hints.EXECUTOR_CORPUS_BYTE_LIMIT``."""
+    import pyarrow.parquet as pq
     from pyarrow import fs as pafs
 
-    # FileSystem.from_uri resolves local paths AND object-store URIs
-    # (s3://, hdfs://, gs://) — executor-side reads must not assume a
-    # POSIX mount (round-2 advice).
+    path = absolute(path)
+    # from_uri resolves local paths AND object-store URIs (s3://, hdfs://,
+    # gs://): executor-side reads must not assume a POSIX mount.
     filesystem, fs_path = pafs.FileSystem.from_uri(path)
-    key = (kind, path, path_fingerprint(filesystem, fs_path))
-    hit = _CAND_CACHE.get(key)
-    if hit is None:
-        for k in [k for k in _CAND_CACHE if k[0] == kind]:
-            del _CAND_CACHE[k]
-        _CAND_CACHE[key] = hit = load(filesystem, fs_path)
-    return hit
-
-
-def _load_candidate_matrix(path: str):
-    def load(filesystem, fs_path):
-        import numpy as np
-        import pyarrow.parquet as pq
-
+    key = (path, path_fingerprint(filesystem, fs_path))
+    slot = _CORPUS.get(key, {})
+    missing = [v for v in views if v not in slot]
+    if slot and not missing:
+        return slot
+    cells = slot["raw"].size if slot else sum(  # the embedding leaf's values
+        rg.column(c).num_values
+        for f in pq.ParquetDataset(fs_path, filesystem=filesystem).fragments
+        for rg in map(f.metadata.row_group, range(f.metadata.num_row_groups))
+        for c in range(rg.num_columns)
+        if rg.column(c).path_in_schema.startswith("embedding.")
+    )
+    resident = cells * 8 * (1 + len({*views, *slot} - {"ids", "raw"}))
+    if resident > hints.EXECUTOR_CORPUS_BYTE_LIMIT:
+        raise ValueError(
+            f"{path}: the executor corpus slot would hold {resident} bytes per "
+            f"Python worker, over EXECUTOR_CORPUS_BYTE_LIMIT "
+            f"({hints.EXECUTOR_CORPUS_BYTE_LIMIT}); use the partition-local "
+            "ann_ivf_topk / ann_ivfpq_topk instead"
+        )
+    if not slot:
+        _CORPUS.clear()
         tbl = pq.read_table(fs_path, filesystem=filesystem, columns=["vec_id", "embedding"])
-        ids = np.asarray(tbl.column("vec_id").to_pylist(), dtype=np.int64)
-        cand = np.asarray(tbl.column("embedding").to_pylist(), dtype=np.float64)
-        unit = cand / np.linalg.norm(cand, axis=1, keepdims=True)
-        return ids, unit
-
-    return _cand_cache_get("float64", path, load)
-
-
-def _load_raw_matrix(path: str):
-    """(ids, raw float64 matrix) — the UN-normalized sibling of
-    ``_load_candidate_matrix`` for kernels that re-rank with the raw
-    left-fold cosine (norms must be folded per vector, not divided out
-    up front).  Executor-memoized per dataset fingerprint like every
-    candidate loader."""
-
-    def load(filesystem, fs_path):
-        import numpy as np
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(fs_path, filesystem=filesystem, columns=["vec_id", "embedding"])
-        ids = np.asarray(tbl.column("vec_id").to_pylist(), dtype=np.int64)
-        raw = np.asarray(tbl.column("embedding").to_pylist(), dtype=np.float64)
-        return ids, raw
-
-    return _cand_cache_get("raw_float64", path, load)
+        if tbl.column("vec_id").null_count:
+            raise ValueError(f"{path}: null vec_id")
+        slot = _CORPUS[key] = {
+            "ids": np.asarray(tbl.column("vec_id").to_numpy(), dtype=np.int64),
+            "raw": _matrix(tbl.column("embedding"), path),
+        }
+    for v in missing:
+        slot[v] = _VIEWS[v](slot["raw"])
+    return slot
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -153,17 +237,17 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     so ranking is deterministic and matches the fold-order-exact SQL oracle
     (matmul-vs-fold float error ~1e-15 is absorbed by the rounding).
     """
-    import numpy as np
     import pandas as pd  # noqa: F401  (mapInPandas batches are pandas)
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cand_path = os.path.join(sf_dir, "embeddings.parquet")
+    cand_path = absolute(os.path.join(sf_dir, "embeddings.parquet"))
 
     def topk(batches):
-        # Executor-side candidate load: memoized per worker process (see
-        # _load_candidate_matrix) — one read/normalize per executor, not
-        # per task, and filesystem-agnostic via pyarrow.fs.
-        ids_b, unit_b = _load_candidate_matrix(cand_path)
+        # Executor-side candidate load: the worker's one corpus slot (see
+        # _corpus) — one read/normalize per worker, not per task, and
+        # filesystem-agnostic via pyarrow.fs.
+        corpus = _corpus(cand_path, "unit")
+        ids_b, unit_b = corpus["ids"], corpus["unit"]
         for pdf in batches:
             q = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             q_unit = q / np.linalg.norm(q, axis=1, keepdims=True)
@@ -288,7 +372,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Cosines round to 6 decimals before ranking with neighbor-id tiebreak —
     deterministic, oracle-reproducible (same trick as ann_cosine_topk)."""
-    import numpy as np
     import pandas as pd
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -435,7 +518,6 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     order is deterministic; results are rounded to 6 decimals to absorb
     the (deterministic-but-different) summation-tree vs the SQL oracle.
     """
-    import numpy as np
     import pandas as pd
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -490,34 +572,13 @@ def arrow_grouped_label_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _load_quantized_matrix(path: str):
-    """Executor memo of the int8-quantized candidate matrix (+ scales).
-
-    Quantization here is elementwise IEEE arithmetic only (abs, max, one
-    divide, +0.5, floor) — no reductions whose order could differ between
-    numpy, Spark, and DuckDB — so every engine derives bit-identical
-    integer vectors.  ~8x smaller resident memory than the float64 matrix
-    of ``_load_candidate_matrix``."""
-
-    def load(filesystem, fs_path):
-        import numpy as np
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(fs_path, filesystem=filesystem, columns=["vec_id", "embedding"])
-        ids = np.asarray(tbl.column("vec_id").to_pylist(), dtype=np.int64)
-        x = np.asarray(tbl.column("embedding").to_pylist(), dtype=np.float64)
-        scale = np.maximum(np.abs(x).max(axis=1), 1e-30) / 127.0
-        q = np.floor(x / scale[:, None] + 0.5).astype(np.int64)
-        return ids, q, scale
-
-    return _cand_cache_get("int8", path, load)
-
-
 def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 neighbors by int8-quantized dot product — the memory-bound
-    scale path ANN engines actually run: integer matmul over vectors 8x
-    smaller than float64, rescaled per pair back to approximate the true
-    dot product.
+    scale path ANN engines actually run: integer matmul over int8-range
+    codes, rescaled per pair back to approximate the true dot product.
+    The codes are held as int64 here (``_int8_view``), so the resident
+    view is as large as the float64 matrix; an int8 store would be 8x
+    smaller.
 
     Determinism without rounding: the integer dot is EXACT, and the
     rescale is two ordered float multiplies ((d * scale_a) * scale_b) —
@@ -528,18 +589,16 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape mirrors ``ann_cosine_topk`` (executor-memoized candidate side,
     Arrow batches, O(k) output); the quantization uses the same
     max-abs/127 symmetric convention as ``embedding_quantize_int8``."""
-    import numpy as np
     import pandas as pd
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cand_path = os.path.join(sf_dir, "embeddings.parquet")
+    cand_path = absolute(os.path.join(sf_dir, "embeddings.parquet"))
 
     def topk(batches):
-        ids_b, q_b, s_b = _load_quantized_matrix(cand_path)
+        corpus = _corpus(cand_path, "int8")
+        ids_b, (q_b, s_b) = corpus["ids"], corpus["int8"]
         for pdf in batches:
-            x = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            s_q = np.maximum(np.abs(x).max(axis=1), 1e-30) / 127.0
-            q_q = np.floor(x / s_q[:, None] + 0.5).astype(np.int64)
+            q_q, s_q = _int8_view(np.array(pdf["embedding"].tolist(), dtype=np.float64))
             d = q_q @ q_b.T  # exact integer dot products
             score = (d.astype(np.float64) * s_q[:, None]) * s_b[None, :]
             out_vec, out_nbr, out_score, out_rank = [], [], [], []
@@ -581,19 +640,17 @@ def _with_ranked_cells(
     computed MAP-SIDE.
 
     r15 (§4 rewrite of the hottest interpreted-HOF ladder): the K x DIM
-    squared-distance folds run as an explicit per-dimension numpy
-    accumulation loop inside ONE ``mapInPandas`` pass — each step is the
-    same IEEE ``(x - c) * (x - c)`` then left-fold add the interpreted
-    ``zip_with``/``aggregate`` ladder performed per row, so the RAW sums
-    are bit-identical (the ``_load_rp_candidate_matrix`` discipline;
-    parity-pinned old-vs-new in ``tests/test_r15_parity.py``).  The
+    squared-distance folds run through the ``_lfold`` kernel inside ONE
+    ``mapInPandas`` pass — each step is the same IEEE ``(x - c) * (x -
+    c)`` then left-fold add the interpreted ``zip_with``/``aggregate``
+    ladder performed per row, so the RAW sums are bit-identical
+    (parity-pinned old-vs-new in ``tests/test_r15_parity.py``).  The
     round-6 and the (d, c) struct sort stay in Spark, so every
     engine-boundary value is produced by the same Catalyst expressions
     as before.  The quantizer (K*dim doubles — tiny at any corpus size)
     rides into the kernel as a closure constant; nothing shuffles.
     Struct ordering is lexicographic (d first, then c), identical to a
     ``min(struct(d, c))`` tiebreak."""
-    import numpy as np
     import pandas as pd  # noqa: F401
     from pyspark.sql import types as T
 
@@ -606,19 +663,14 @@ def _with_ranked_cells(
 
     def dists(batches):
         C = np.asarray(cents, dtype=np.float64)  # K x DIM closure constant
-        n_cells, ndim = C.shape
+        n_cells = len(C)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             X = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
             D = np.empty((len(pdf), n_cells), dtype=np.float64)
             for ki in range(n_cells):
-                crow = C[ki]
-                acc = np.zeros(len(pdf), dtype=np.float64)
-                for d in range(ndim):
-                    diff = X[:, d] - crow[d]
-                    acc += diff * diff
-                D[:, ki] = acc
+                D[:, ki] = _sq_dists(X, C[ki])
             out = pdf.copy()
             out["_cell_d2"] = list(D)
             yield out
@@ -770,7 +822,6 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the oracle's unrolled fold at every observed value (the same
     accepted equivalence as ann_ivf_topk, which has been oracle-green on
     this formulation since round 1)."""
-    import numpy as np
     import pandas as pd
 
     with_cells = _ranked_cells_src(spark, sf_dir)
@@ -967,7 +1018,6 @@ def ann_query_broadcast_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     triples — never embeddings, never the corpus.  Round-6-before-rank
     with corpus-id tiebreaks at both levels, same accepted matmul-vs-fold
     equivalence as the other cosine families."""
-    import numpy as np
     import pandas as pd
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1089,7 +1139,6 @@ def _ivf_probe_serve(
     At 100 TB this is the real serving shape: the index is sharded by
     cell on disk, a query touches probe-many shards, and nothing about
     the search re-reads the corpus."""
-    import numpy as np
     import pandas as pd
 
     from ..storage import txlog
@@ -1306,7 +1355,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise block runs as one grouped Arrow matmul.  Cell size is
     n / K, bounded in production by scaling K ~ sqrt(n) (the paper runs
     50k clusters for LAION) — never an all-pairs join."""
-    import numpy as np
     import pandas as pd
 
     with_cells = _ranked_cells_src(spark, sf_dir).select(
@@ -1442,13 +1490,13 @@ def embedding_norm_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     everywhere.  The unit-norm boolean re-normalizes and checks the self
     dot lands within 1e-9 of 1 (the oracle pins TRUE).
 
-    Scale: map-only, zero shuffle; Arrow batches stream through without a
+    Scale: map-only, zero shuffle; each Arrow batch is flattened into one
+    float64 matrix and folded a dimension at a time (``_lfold``), with no
     per-row Python boundary crossing."""
-    import math
-
     import pyarrow as pa
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    where = f"embeddings of {sf_dir}"
 
     out_pa = pa.schema(
         [
@@ -1460,25 +1508,17 @@ def embedding_norm_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def norms(batches):
         for batch in batches:
-            ids = batch.column("vec_id").to_pylist()
-            vecs = batch.column("embedding").to_pylist()
-            out_n, out_u = [], []
-            for vec in vecs:
-                acc = 0.0
-                for x in vec:
-                    acc += float(x) * float(x)
-                nrm = math.sqrt(acc)
-                out_n.append(math.floor(nrm * 1000000.0) / 1000000.0)
-                d = 0.0
-                for x in vec:
-                    y = float(x) / nrm
-                    d += y * y
-                out_u.append(abs(d - 1.0) <= 1e-9)
+            if not batch.num_rows:
+                continue
+            x = _matrix(batch.column("embedding"), where)
+            nrm = _norms(x)
+            y = x / nrm[:, None]
+            d = _lfold(lambda j: y[:, j] * y[:, j], x.shape[1])
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(ids, pa.int64()),
-                    pa.array(out_n, pa.float64()),
-                    pa.array(out_u, pa.bool_()),
+                    batch.column("vec_id"),
+                    pa.array(np.floor(nrm * 1000000.0) / 1000000.0, pa.float64()),
+                    pa.array(np.abs(d - 1.0) <= 1e-9, pa.bool_()),
                 ],
                 schema=out_pa,
             )
@@ -1539,43 +1579,6 @@ RP_TOPK_DIM = 32  # ANN projection width: 2x reduction, ~0.8 recall@5
 RP_CAND_M = 100  # candidates surviving the projected-space cut
 
 
-def _load_rp_candidate_matrix(path: str):
-    """(ids, raw64, n64, proj, nproj) memo: the projected candidate matrix
-    plus what the exact rerank needs.  Projection and norms use EXPLICIT
-    left-fold accumulation (one vectorized pass per dimension), so every
-    scalar matches the oracle's unrolled fold chains bit-for-bit — numpy's
-    pairwise-summing matmul would drift ~1e-16 at the candidate-cut
-    boundary."""
-
-    def load(filesystem, fs_path):
-        import numpy as np
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(
-            fs_path, filesystem=filesystem, columns=["vec_id", "embedding"]
-        )
-        ids = np.asarray(tbl.column("vec_id").to_pylist(), dtype=np.int64)
-        raw = np.asarray(tbl.column("embedding").to_pylist(), dtype=np.float64)
-        planes = np.asarray(_rp_matrix(RP_TOPK_DIM), dtype=np.float64)
-        proj = np.zeros((raw.shape[0], RP_TOPK_DIM))
-        for p in range(RP_TOPK_DIM):
-            acc = np.zeros(raw.shape[0])
-            for j in range(DIM):  # left fold, matches the oracle
-                acc += planes[p, j] * raw[:, j]
-            proj[:, p] = acc / np.sqrt(float(RP_TOPK_DIM))
-        nproj = np.zeros(raw.shape[0])
-        for p in range(RP_TOPK_DIM):
-            nproj += proj[:, p] * proj[:, p]
-        nproj = np.sqrt(nproj)
-        n64 = np.zeros(raw.shape[0])
-        for j in range(DIM):
-            n64 += raw[:, j] * raw[:, j]
-        n64 = np.sqrt(n64)
-        return ids, raw, n64, proj, nproj
-
-    return _cand_cache_get("rp_topk", path, load)
-
-
 def ann_rp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RP-accelerated ANN — the Johnson-Lindenstrauss projection put to
     work: candidate generation runs ENTIRELY in the 32-dim projected
@@ -1592,37 +1595,24 @@ def ann_rp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages round to 6 decimals BEFORE ranking with vec_id tiebreaks;
     projection/norm/dot folds are explicit left folds so the candidate
     cut itself is bit-identical to the SQL oracle."""
-    import numpy as np
     import pandas as pd  # noqa: F401
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cand_path = os.path.join(sf_dir, "embeddings.parquet")
-    planes_lit = _rp_matrix(RP_TOPK_DIM)
+    cand_path = absolute(os.path.join(sf_dir, "embeddings.parquet"))
+    planes = _rp_matrix(RP_TOPK_DIM)
 
     def topk(batches):
-        ids_b, raw_b, n64_b, proj_b, n8_b = _load_rp_candidate_matrix(cand_path)
-        planes = np.asarray(planes_lit, dtype=np.float64)
+        corpus = _corpus(cand_path, "norm", "rp")
+        ids_b, raw_b, n64_b = corpus["ids"], corpus["raw"], corpus["norm"]
+        proj_b, n8_b = corpus["rp"]
         for pdf in batches:
             q_raw = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            nq = q_raw.shape[0]
-            q_proj = np.zeros((nq, RP_TOPK_DIM))
-            for p in range(RP_TOPK_DIM):
-                acc = np.zeros(nq)
-                for j in range(DIM):
-                    acc += planes[p, j] * q_raw[:, j]
-                q_proj[:, p] = acc / np.sqrt(float(RP_TOPK_DIM))
-            qn8 = np.zeros(nq)
-            for p in range(RP_TOPK_DIM):
-                qn8 += q_proj[:, p] * q_proj[:, p]
-            qn8 = np.sqrt(qn8)
-            qn64 = np.zeros(nq)
-            for j in range(DIM):
-                qn64 += q_raw[:, j] * q_raw[:, j]
-            qn64 = np.sqrt(qn64)
+            q_proj, qn8 = _rp_view(q_raw, planes)
+            qn64 = _norms(q_raw)
             # projected cosine, oracle operation order: fold(dot) / (na*nb)
-            pdot = np.zeros((nq, len(ids_b)))
-            for p in range(RP_TOPK_DIM):
-                pdot += q_proj[:, p:p + 1] * proj_b[:, p][None, :]
+            pdot = _lfold(
+                lambda p: q_proj[:, p:p + 1] * proj_b[:, p][None, :], RP_TOPK_DIM
+            )
             pcos = np.round(pdot / (qn8[:, None] * n8_b[None, :]), 6)
             out_vec, out_nbr, out_cos, out_rank = [], [], [], []
             for qi, vid in enumerate(pdf["vec_id"]):
@@ -1633,9 +1623,8 @@ def ann_rp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cand_ids = sel_ids[order]
                 cand_ix = np.nonzero(mask)[0][order]
                 # exact 64-dim rerank over the M candidates only
-                dot64 = np.zeros(len(cand_ix))
-                for j in range(DIM):
-                    dot64 += q_raw[qi, j] * raw_b[cand_ix, j]
+                cand_raw = raw_b[cand_ix]
+                dot64 = _lfold(lambda j: q_raw[qi, j] * cand_raw[:, j], DIM)
                 cos64 = np.round(dot64 / (qn64[qi] * n64_b[cand_ix]), 6)
                 fin = np.lexsort((cand_ids, -cos64))[:TOP_K]
                 out_vec.extend([vid] * len(fin))
@@ -1849,13 +1838,12 @@ def _pq_sub_d2_df(
     shared kernel under both the query-side LUTs and the corpus encode.
 
     r15 (§4, the T2/T3 discipline): the PQ_M x PQ_K x PQ_SUB distance
-    folds run as explicit per-dimension numpy accumulation inside one
+    folds run through the ``_lfold`` kernel inside one
     ``mapInPandas`` pass (each step the same IEEE ``(x-c)*(x-c)`` then
     left-fold add the interpreted ladder performed — raw sums
     bit-identical; parity-pinned in ``tests/test_r15_parity.py``), with
     the codebook as a closure constant; round-6 / argmin stay Catalyst
     expressions downstream so every engine-boundary value is unchanged."""
-    import numpy as np
     import pandas as pd  # noqa: F401
     from pyspark.sql import types as T
 
@@ -1884,12 +1872,7 @@ def _pq_sub_d2_df(
             for m in range(m_n):
                 sub = V[:, m * s_n : (m + 1) * s_n]
                 for k in range(k_n):
-                    crow = cb[m, k]
-                    acc = np.zeros(n, dtype=np.float64)
-                    for d in range(s_n):
-                        diff = sub[:, d] - crow[d]
-                        acc += diff * diff
-                    out[:, m, k] = acc
+                    out[:, m, k] = _sq_dists(sub, cb[m, k])
             res = pdf[carried_in].copy()
             res["_sub_d2"] = [[r.tolist() for r in row] for row in out]
             yield res
@@ -2312,7 +2295,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     so this is the true top-3-excluding result, not a shortlist filter.
     The doc->source dim attach is size-gated (``broadcast_if_small``):
     it is corpus-keyed, so at 100 TB it must NOT be hint-broadcast."""
-    import numpy as np
     import pandas as pd
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -2331,10 +2313,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_mat = np.array([list(r["embedding"]) for r in a_rows], dtype=np.float64)
     q_src = np.array([r["source"] for r in a_rows], dtype=object)
     dims = q_mat.shape[1]
-    q_norm = np.zeros(len(a_rows))
-    for j in range(dims):
-        q_norm += q_mat[:, j] * q_mat[:, j]
-    q_norm = np.sqrt(q_norm)
+    q_norm = _norms(q_mat)
     bq = spark.sparkContext.broadcast((q_ids, q_mat, q_src, q_norm))
 
     def partition_topk(batches):
@@ -2348,13 +2327,8 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             # explicit left folds: acc_j+1 = acc_j + x_j*y_j, matching the
             # Catalyst fold / oracle sum chain bit-for-bit (no pairwise
             # matmul summation on a cross-engine rank boundary)
-            c_norm = np.zeros(len(c_ids))
-            for j in range(dims):
-                c_norm += mat[:, j] * mat[:, j]
-            c_norm = np.sqrt(c_norm)
-            dots = np.zeros((len(c_ids), len(ids_q)))
-            for j in range(dims):
-                dots += np.outer(mat[:, j], mat_q[:, j])
+            c_norm = _norms(mat)
+            dots = _lfold(lambda j: np.outer(mat[:, j], mat_q[:, j]), dims)
             cos = dots / np.outer(c_norm, norm_q)
             cos6 = np.floor(cos * 1000000.0 + 0.5) / 1000000.0
             out_q, out_c, out_s = [], [], []
@@ -2627,14 +2601,14 @@ def _truncated_cosine_pairs(
     Slicing the memoized UNIT matrix then renormalizing equals slicing the
     raw vectors (the scale cancels); the ~1e-15 float difference is
     absorbed by the round-6-before-rank discipline like matmul-vs-fold."""
-    import numpy as np
     import pandas as pd  # noqa: F401
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cand_path = os.path.join(sf_dir, "embeddings.parquet")
+    cand_path = absolute(os.path.join(sf_dir, "embeddings.parquet"))
 
     def topk(batches):
-        ids_b, unit_b = _load_candidate_matrix(cand_path)
+        corpus = _corpus(cand_path, "unit")
+        ids_b, unit_b = corpus["ids"], corpus["unit"]
         sub = unit_b[:, :dim]
         sub = sub / np.linalg.norm(sub, axis=1, keepdims=True)
         for pdf in batches:
@@ -2707,9 +2681,8 @@ def ann_mrl_adaptive_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: the re-rank cosine is a LEFT-FOLD dot product with
     round-6 + id tiebreaks — textually mirrored by the DuckDB fold, so
     no matmul-vs-fold boundary risk on the final ranking; recall is
-    integer hits over one division.  The fold now runs as an explicit
-    per-dimension numpy accumulation loop (``acc += q[d] * c[d]`` in
-    index order — the ``_load_rp_candidate_matrix`` discipline: each
+    integer hits over one division.  The fold now runs through the
+    ``_lfold`` kernel (``q[d] * c[d]`` added in index order: each
     step is the same IEEE mul+add the interpreted ``F.aggregate``
     ladder performed, so the raw sums are bit-identical; r15 §4
     rewrite of the hottest interpreted-HOF path, parity-pinned in
@@ -2719,59 +2692,47 @@ def ann_mrl_adaptive_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     and its two embedding-carrying probes are gone entirely; the pass
     emits 50 (qid, cand, raw fold sums) rows per query and nothing
     else ever shuffles embeddings."""
-    import numpy as np
     import pandas as pd  # noqa: F401
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cand_path = os.path.join(sf_dir, "embeddings.parquet")
+    cand_path = absolute(os.path.join(sf_dir, "embeddings.parquet"))
     dim, k = MRL_COARSE_DIM, MRL_SHORTLIST
 
     def shortlist_rerank(batches):
-        ids_b, unit_b = _load_candidate_matrix(cand_path)
-        ids_r, raw_b = _load_raw_matrix(cand_path)
-        sorter = np.argsort(ids_r)
+        corpus = _corpus(cand_path, "unit", "norm")
+        ids_b, raw_b, unit_b = corpus["ids"], corpus["raw"], corpus["unit"]
+        # Per-candidate norms as the same left fold the old plan ran per
+        # pair row (a candidate's fold is pair-independent, so folding
+        # once per vector is value-identical to folding per pair).
+        nrm_c = corpus["norm"]
         sub = unit_b[:, :dim]
         sub = sub / np.linalg.norm(sub, axis=1, keepdims=True)
-        # Per-candidate norm² as the same left fold the old plan ran per
-        # pair row: acc += c[d] * c[d] in dimension order (a candidate's
-        # fold is pair-independent, so folding once per vector is
-        # value-identical to folding per pair).
-        cn2 = np.zeros(len(ids_r), dtype=np.float64)
-        for d in range(DIM):
-            cn2 += raw_b[:, d] * raw_b[:, d]
-        nrm_c = np.sqrt(cn2)
         for pdf in batches:
             qraw = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             qc = qraw[:, :dim]
             q_unit = qc / np.linalg.norm(qc, axis=1, keepdims=True)
             cos = np.round(q_unit @ sub.T, 6)
-            qn2 = np.zeros(len(qraw), dtype=np.float64)
-            for d in range(DIM):
-                qn2 += qraw[:, d] * qraw[:, d]
-            nrm_q = np.sqrt(qn2)
-            qidx_l, cid_l, cidx_l = [], [], []
+            nrm_q = _norms(qraw)
+            qidx_l, cidx_l = [], []
             ids = pdf["vec_id"].to_numpy()
             for qi, vid in enumerate(ids):
                 row = cos[qi]
                 mask = ids_b != vid
                 order = np.lexsort((ids_b[mask], -row[mask]))[:k]
-                sel = ids_b[mask][order]
-                qidx_l.append(np.full(len(sel), qi, dtype=np.int64))
-                cid_l.append(sel)
-                cidx_l.append(sorter[np.searchsorted(ids_r, sel, sorter=sorter)])
+                # ids and raw rows share one row order: index them directly
+                cix = np.nonzero(mask)[0][order]
+                qidx_l.append(np.full(len(cix), qi, dtype=np.int64))
+                cidx_l.append(cix)
             qidx = np.concatenate(qidx_l) if qidx_l else np.empty(0, np.int64)
-            cid = np.concatenate(cid_l) if cid_l else np.empty(0, np.int64)
             cidx = np.concatenate(cidx_l) if cidx_l else np.empty(0, np.int64)
             # The rerank dot, one vectorized left-fold step per dimension.
-            dot = np.zeros(len(qidx), dtype=np.float64)
             qm, cm = qraw[qidx], raw_b[cidx]
-            for d in range(DIM):
-                dot += qm[:, d] * cm[:, d]
+            dot = _lfold(lambda d: qm[:, d] * cm[:, d], DIM)
             cos_raw = dot / (nrm_q[qidx] * nrm_c[cidx])
             yield pd.DataFrame(
                 {
                     "vec_id": ids[qidx],
-                    "neighbor_id": cid,
+                    "neighbor_id": ids_b[cidx],
                     "cos_raw": cos_raw,
                 }
             )
@@ -3137,10 +3098,8 @@ def _centroid_dist2_micros(index: DataFrame, batch: DataFrame) -> int:
             "centroid distance needs two non-empty sides with the same "
             f"embedding dimensions (index has {len(ci)}, batch has {len(cb)})"
         )
-    d2 = 0.0
-    for dim in sorted(ci):
-        diff = ci[dim] - cb[dim]
-        d2 += diff * diff
+    diffs = [ci[dim] - cb[dim] for dim in sorted(ci)]
+    d2 = _lfold(lambda i: diffs[i] * diffs[i], len(diffs))
     return int(math.floor(d2 * 1_000_000 + 0.5))
 
 

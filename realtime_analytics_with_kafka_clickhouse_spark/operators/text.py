@@ -1276,8 +1276,8 @@ BPE_TRAIN_STEPS = 3
 _BPE_SEP = "\x1f"  # unit separator: never appears in fixture text
 
 # Fitted merge tables per (sf_dir, steps): training runs once per session,
-# shared by bpe_train_merges and bpe_tokenize_stats (the _CAND_CACHE /
-# kmeans-quantizer memo discipline — K rows of driver state).
+# shared by bpe_train_merges and bpe_tokenize_stats (the kmeans-quantizer
+# memo discipline — K rows of driver state).
 _BPE_FIT_MEMO: dict = {}
 
 
