@@ -9,14 +9,30 @@ list bounded by CC_DRIVER_MAX_EDGES), but RE-DERIVING it is a full Spark
 job (Lloyd rounds / the whole MinHash-LSH pipeline), so a session that
 runs several of those queries pays the job once per query.
 
+Two-store rule: a derived value lives in exactly one of the package's two
+memos, chosen by what it is bound to.
+
+* Process-level values (fitted models, label lists, scratch-table paths,
+  replay-source paths with their schema) live here, in ``_MEMO``.  Keys
+  are ``(kind, ...)``: ``memo_get`` keys on a metadata-only dataset
+  fingerprint (max mtime + total bytes over the input's parquet files, via
+  pyarrow.fs so object-store URIs work like local paths); the build-once
+  tables of ``sources.tables.build_once`` key on ``sources.tables.memo_key``
+  of each table they read.  A rewritten fixture at the same path misses
+  instead of serving stale results, a key that cannot be built (a fake or
+  missing dir) never caches, and every build adds its seconds to
+  ``BUILD_SEC``.
+* Session-bound values (DataFrames, plans, catalog table names) live in
+  ``sources.tables._SESSION_MEMO``, which dies with its SparkSession.
+
+One slot per kind bounds footprint: a new key for a kind evicts the old
+one.  An evicted scratch path stays on disk until exit (``scratch_dir``),
+so a lazy frame that still reads it keeps working.
+
 This memo lives on the DRIVER in plain Python, so it survives
 ``spark.catalog.clearCache()`` (which the bench issues between queries to
 keep executor memory honest) and never holds executor memory or a
-DataFrame lineage.  Keys carry a metadata-only dataset fingerprint
-(max mtime + total bytes over the input's parquet files, via pyarrow.fs
-so object-store URIs work like local paths) — a rewritten fixture at the
-same path misses the cache instead of serving stale results.  One slot
-per artifact kind bounds footprint.
+DataFrame lineage.
 
 The module also owns the package's one scratch workspace: ``scratch_dir``
 hands out every temp path (memo artifacts, stream checkpoints, build-once
@@ -32,6 +48,7 @@ import glob
 import os
 import shutil
 import tempfile
+import time
 import uuid
 from typing import Any, Callable
 
@@ -103,8 +120,13 @@ def memo_put(kind: str, sf_dir: str, tables: tuple[str, ...], value: Any) -> Any
         key = _key(kind, sf_dir, tables)
     except Exception:
         return value  # unfingerprintable input: don't cache, stay correct
-    for k in [k for k in _MEMO if k[0] == kind]:  # one slot per kind
-        del _MEMO[k]
+    return _put(key, value)
+
+
+def _put(key: tuple, value: Any) -> Any:
+    """Store ``value`` in the one slot of kind ``key[0]``."""
+    for k in [k for k in list(_MEMO) if k[0] == key[0]]:
+        _MEMO.pop(k, None)
     _MEMO[key] = value
     return value
 
@@ -119,15 +141,29 @@ BUILD_SEC: dict[str, float] = {}
 def memo_get(
     kind: str, sf_dir: str, tables: tuple[str, ...], compute: Callable[[], Any]
 ) -> Any:
-    hit = memo_peek(kind, sf_dir, tables)
-    if hit is _MISS:
-        import time
+    return memo_build(kind, lambda: _key(kind, sf_dir, tables)[1:], compute)
 
+
+def memo_build(
+    kind: str, key_of: Callable[[], tuple], compute: Callable[[], Any]
+) -> Any:
+    """The value in ``kind``'s slot under key ``(kind,) + key_of()``,
+    built by ``compute()`` (timed into ``BUILD_SEC``) on a miss.  When
+    ``key_of`` raises, the input has no identity: the value is built and
+    never cached."""
+    try:
+        key = (kind, *key_of())
+    except Exception:
+        key = None
+    hit = _MEMO.get(key, _MISS)
+    if hit is _MISS:
         t0 = time.perf_counter()
-        hit = memo_put(kind, sf_dir, tables, compute())
+        hit = compute()
         BUILD_SEC[kind] = round(
             BUILD_SEC.get(kind, 0.0) + time.perf_counter() - t0, 4
         )
+        if key is not None:
+            _put(key, hit)
     return hit
 
 

@@ -48,7 +48,7 @@ from ..functions.hints import (
     collect_request_sized,
     runtime_broadcast,
 )
-from ..sources.tables import load_table, memo_key
+from ..sources.tables import build_once, load_table
 from ._memo import absolute, path_fingerprint, scratch_dir, scratch_persist
 
 DIM = 64
@@ -1069,9 +1069,6 @@ def ann_query_broadcast_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_INDEX_MEMO: dict[tuple, str] = {}
-
-
 def _build_ivf_index_table(spark: SparkSession, sf_dir: str) -> str:
     """Persist the IVF index INTO THE TXLOG TABLE FORMAT, cell-chunked:
     assignments (vec_id, cluster, embedding) appended as 4 cluster-RANGE
@@ -1080,11 +1077,10 @@ def _build_ivf_index_table(spark: SparkSession, sf_dir: str) -> str:
     index-as-table lifecycle: the index survives the session, serves
     queries through ordinary pruned scans, and inherits the txlog's
     snapshot/commit semantics (a rebuild is just new appends + a new
-    snapshot)."""
+    snapshot).  Built once per embeddings ``memo_key``."""
     from ..storage import txlog
 
-    key = memo_key(spark, sf_dir, "embeddings")
-    if key not in _IVF_INDEX_MEMO:
+    def build() -> str:
         assigned = _ranked_cells_src(spark, sf_dir).select(
             "vec_id",
             F.element_at("ranked", 1)["c"].alias("cluster"),
@@ -1112,8 +1108,9 @@ def _build_ivf_index_table(spark: SparkSession, sf_dir: str) -> str:
             )
         finally:
             assigned.unpersist(blocking=False)
-        _IVF_INDEX_MEMO[key] = table
-    return _IVF_INDEX_MEMO[key]
+        return table
+
+    return build_once(spark, sf_dir, ("embeddings",), "ivf_index_table", build)
 
 
 def _ivf_probe_serve(

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import stable_hash64
 from ..functions.hints import runtime_broadcast
-from ..sources.tables import load_table
+from ..sources.tables import build_once, load_table
 
 _FP_MOD = 1_000_000_007
 
@@ -1275,23 +1275,19 @@ def split_sentences_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_TRAIN_STEPS = 3
 _BPE_SEP = "\x1f"  # unit separator: never appears in fixture text
 
-# Fitted merge tables per (sf_dir, steps): training runs once per session,
-# shared by bpe_train_merges and bpe_tokenize_stats (the kmeans-quantizer
-# memo discipline — K rows of driver state).
-_BPE_FIT_MEMO: dict = {}
+
+def _bpe_fit(spark: SparkSession, sf_dir: str) -> list:
+    """BPE_TRAIN_STEPS merge steps over the word corpus; returns the
+    learned merge table [(step, left, right, merged, cnt)].  See
+    bpe_train_merges for the distributed shape and the cross-engine
+    replace semantics.  Trained once per documents ``memo_key``, shared by
+    bpe_train_merges and bpe_tokenize_stats (K rows of driver state)."""
+    return build_once(
+        spark, sf_dir, ("documents",), "bpe_merges", lambda: _bpe_train(spark, sf_dir)
+    )
 
 
-def _bpe_fit(
-    spark: SparkSession, sf_dir: str, steps: int = BPE_TRAIN_STEPS
-) -> list:
-    """K BPE merge steps over the word corpus; returns the learned merge
-    table [(step, left, right, merged, cnt)].  See bpe_train_merges for
-    the distributed shape and the cross-engine replace semantics."""
-    import os as _os
-
-    key = (_os.path.abspath(sf_dir), steps)
-    if key in _BPE_FIT_MEMO:
-        return _BPE_FIT_MEMO[key]
+def _bpe_train(spark: SparkSession, sf_dir: str) -> list:
     sep = _BPE_SEP
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
@@ -1301,7 +1297,7 @@ def _bpe_fit(
     cur = words.select(seq0.alias("seq")).persist()
     try:
         merges: list = []
-        for step in range(1, steps + 1):
+        for step in range(1, BPE_TRAIN_STEPS + 1):
             sym = F.filter(F.split(F.col("seq"), sep), lambda x: x != F.lit(""))
             pair_arr = F.transform(
                 F.sequence(F.lit(1), F.greatest(F.size(sym) - 1, F.lit(1))),
@@ -1337,7 +1333,6 @@ def _bpe_fit(
             cur = nxt
     finally:
         cur.unpersist(blocking=False)
-    _BPE_FIT_MEMO[key] = merges
     return merges
 
 

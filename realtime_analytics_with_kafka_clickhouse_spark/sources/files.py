@@ -15,31 +15,11 @@ prove the readers end-to-end against the same oracles as the parquet path.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .tables import load_table, memo_key
-
-_MIRROR_MEMO: dict[tuple, str] = {}
-# Cached DLQ scans per (session, format, path): the corrupt-column split
-# needs one cache()d frame (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and
-# memoizing it — like the mirror helpers — keeps repeated reads of the
-# same path from stacking fresh cached copies in storage memory.  The key
-# carries a SESSION-LIFETIME token (applicationId + context start time)
-# because a cached DataFrame is bound to its SparkSession: after a
-# session restart in the same process a path-only key would serve a frame
-# whose session is stopped — and CPython can even reuse id(spark) for the
-# replacement session, so an object id is not a safe token either.
-_DLQ_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _session_token(spark: SparkSession) -> tuple:
-    sc = spark.sparkContext
-    return (sc.applicationId, sc.startTime)
-
+from .tables import _memoized, build_once, load_table
 
 EVENTS_JSON_SCHEMA = T.StructType(
     [
@@ -71,12 +51,12 @@ def _mirror(spark: SparkSession, sf_dir: str, table: str, fmt: str, write) -> st
     once per table ``memo_key`` (a rewritten table gets a fresh copy)."""
     from ..operators._memo import scratch_dir
 
-    key = (fmt,) + memo_key(spark, sf_dir, table)
-    if key not in _MIRROR_MEMO:
+    def build() -> str:
         path = scratch_dir("file_mirrors", f"{table}-{fmt}")
         write(load_table(spark, sf_dir, table), path)
-        _MIRROR_MEMO[key] = path
-    return _MIRROR_MEMO[key]
+        return path
+
+    return build_once(spark, sf_dir, (table,), f"{table}_{fmt}_mirror", build)
 
 
 def json_events_mirror(spark: SparkSession, sf_dir: str) -> str:
@@ -103,26 +83,39 @@ def read_json_with_dlq(
 ) -> tuple[DataFrame, DataFrame]:
     """(rows, quarantined) from a JSON-lines scan: explicit schema,
     PERMISSIVE corrupt capture — the quarantine side keeps the raw line."""
+    return _split_dlq(spark, path, schema, "json")
+
+
+def _split_dlq(
+    spark: SparkSession, path: str, schema: T.StructType, fmt: str, **options: str
+) -> tuple[DataFrame, DataFrame]:
+    """(rows, quarantined) of one PERMISSIVE ``fmt`` scan of ``path`` with
+    the extra reader ``options``.
+
+    Spark forbids referencing ONLY the corrupt column off a raw scan
+    (QUERY_ONLY_CORRUPT_RECORD_COLUMN), so both sides split from one
+    cache()d frame — the documented pattern.  The frame is memoized per
+    session, format and path (``sources.tables._memoized``): a cached
+    DataFrame is bound to its SparkSession, and repeated reads of one path
+    must not stack fresh cached copies in storage memory."""
+    from ..operators._memo import absolute
+
     corrupt = "_corrupt_record"
-    dlq_key = (*_session_token(spark), "json", os.path.abspath(path))
-    if dlq_key in _DLQ_MEMO:
-        df = _DLQ_MEMO[dlq_key]
-    else:
-        full = T.StructType(
-            schema.fields + [T.StructField(corrupt, T.StringType())]
-        )
-        df = (
+    full = T.StructType(schema.fields + [T.StructField(corrupt, T.StringType())])
+
+    def build() -> DataFrame:
+        return (
             spark.read.schema(full)
+            .options(**options)
             .option("mode", "PERMISSIVE")
             .option("columnNameOfCorruptRecord", corrupt)
             .option("timestampFormat", _TS_FMT)
-            .json(path)
+            .format(fmt)
+            .load(path)
+            .cache()
         )
-        # Spark forbids referencing ONLY the corrupt column off a raw scan
-        # (QUERY_ONLY_CORRUPT_RECORD_COLUMN); cache the parsed frame so both
-        # sides split from one materialization — the documented pattern.
-        df = df.cache()
-        _DLQ_MEMO[dlq_key] = df
+
+    df = _memoized(spark, lambda: (f"{fmt}_dlq", absolute(path)), build)
     ok = df.filter(F.col(corrupt).isNull()).drop(corrupt)
     bad = df.filter(F.col(corrupt).isNotNull()).select(
         F.col(corrupt).alias("raw")
@@ -134,29 +127,7 @@ def read_csv_with_dlq(
     spark: SparkSession, path: str, schema: T.StructType
 ) -> tuple[DataFrame, DataFrame]:
     """(rows, quarantined) from a headered CSV scan, same contract."""
-    corrupt = "_corrupt_record"
-    dlq_key = (*_session_token(spark), "csv", os.path.abspath(path))
-    if dlq_key in _DLQ_MEMO:
-        df = _DLQ_MEMO[dlq_key]
-    else:
-        full = T.StructType(
-            schema.fields + [T.StructField(corrupt, T.StringType())]
-        )
-        df = (
-            spark.read.schema(full)
-            .option("header", "true")
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", corrupt)
-            .option("timestampFormat", _TS_FMT)
-            .csv(path)
-        )
-        df = df.cache()  # same corrupt-column restriction as JSON
-        _DLQ_MEMO[dlq_key] = df
-    ok = df.filter(F.col(corrupt).isNull()).drop(corrupt)
-    bad = df.filter(F.col(corrupt).isNotNull()).select(
-        F.col(corrupt).alias("raw")
-    )
-    return ok, bad
+    return _split_dlq(spark, path, schema, "csv", header="true")
 
 
 def orc_events_mirror(spark: SparkSession, sf_dir: str) -> str:

@@ -17,22 +17,24 @@ from pyspark.sql import types as T
 
 from ..schemas import TESTDATA_TABLES
 
-# Fingerprint-keyed plan memo (r14 schema memo, widened r15): a
-# bench/oracle session calls ``load_table`` thousands of times over the same
-# few immutable files, and every bare ``spark.read.parquet`` re-infers the
-# schema (driver-side footer read + file listing, 75-97 ms) while even a
-# schema-supplied read still pays ~10-15 ms of py4j/analysis chatter per
-# call.  So the memo stores the fully-normalized scan DataFrame per
-# ``memo_key``, and ``prepared`` stores whole query plans (the dashboard
-# panels) in the same dict.  This is metadata, never data: a rewritten
-# fixture at the same path changes the fingerprint and misses; an
-# unfingerprintable path degrades to a plain build.
+# Session memo: the store of session-bound derived values (the other
+# store, ``operators._memo``, holds process-level ones; see its docstring
+# for the rule).  Here live the fully-normalized scan DataFrame per
+# ``memo_key`` (a bench/oracle session calls ``load_table`` thousands of
+# times over the same few immutable files, and every bare
+# ``spark.read.parquet`` re-infers the schema: driver-side footer read +
+# file listing, 75-97 ms), the ``prepared`` query plans (the dashboard
+# panels), cached file scans (``sources.files`` DLQ readers) and catalog
+# table names (``storage.bucketing``).  A rewritten fixture at the same path
+# changes the fingerprint and misses; an unfingerprintable path degrades to
+# a plain build.
 #
-# Keying (r14 VERDICT "what's wrong" #2): entries hang off the SparkSession
-# itself via a WeakKeyDictionary — a plan built under one session's conf
-# can never leak into another session (CPython id() recycling made the old
-# ``id(spark)`` key theoretically collidable), and a dead session's frames
-# are dropped with it instead of pinning JVM-side plan handles.
+# Entries hang off the SparkSession itself via a WeakKeyDictionary: a
+# value built under one session (its conf, its cache, its catalog) never
+# leaks into another, including a new session after ``spark.stop()`` in
+# the same process (CPython can reuse ``id(spark)``, so an id is no key),
+# and a dead session's values are dropped with it instead of pinning
+# JVM-side plan handles.
 _SESSION_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
@@ -89,6 +91,23 @@ def _memoized(spark: SparkSession, key_of, build):
             dfs.clear()
         dfs[key] = df
     return df
+
+
+def build_once(
+    spark: SparkSession, sf_dir: str, tables: tuple[str, ...], kind: str, build
+):
+    """``build()``'s process-level value (a scratch-table path, a replay
+    source) in ``operators._memo``'s one slot for ``kind``, keyed on the
+    ``memo_key`` of each of ``tables``: built once per table state and
+    session time zone, timed into ``BUILD_SEC``.  A table that cannot be
+    fingerprinted builds on every call."""
+    from ..operators._memo import memo_build
+
+    return memo_build(
+        kind,
+        lambda: tuple(part for t in tables for part in memo_key(spark, sf_dir, t)),
+        build,
+    )
 
 
 def _load_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -119,12 +119,6 @@ def salted_join(
     )
 
 
-# Bucketed-table memo: the bucketed write (the amortized shuffle) happens
-# once per orders and lineitem ``memo_key``; every join against the tables
-# after that is exchange-free on both sides.
-_BUCKETED_MEMO: dict = {}
-
-
 def bucketed_orders_lineitem_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-gated proof of the bucketed co-located join (SURVEY.md §4):
     orders and lineitem both bucketed by order key at write time, joined
@@ -132,16 +126,20 @@ def bucketed_orders_lineitem_join(spark: SparkSession, sf_dir: str) -> DataFrame
     and is amortized over every later join — co-partitioned storage), then
     a priority-keyed revenue aggregate.  The oracle is the plain
     join+aggregate, so the row proves bucketed == unbucketed results;
-    tests/test_plans.py pins the exchange-free plan shape."""
+    tests/test_plans.py pins the exchange-free plan shape.
+
+    The bucketed write (the amortized shuffle) happens once per session and
+    orders and lineitem ``memo_key``: the tables are named in the session's
+    catalog, so they are memoized with the session (``_memoized``), and a
+    new session writes and names them anew."""
     import os
     import uuid
 
     from ..functions.scalars import dsum
     from ..operators._memo import scratch_dir
-    from ..sources.tables import load_table, memo_key
+    from ..sources.tables import _memoized, load_table, memo_key
 
-    key = memo_key(spark, sf_dir, "orders") + memo_key(spark, sf_dir, "lineitem")
-    if key not in _BUCKETED_MEMO:
+    def build() -> tuple[str, str]:
         run = uuid.uuid4().hex[:8]
         root = scratch_dir("bucketed", run)
         ot, lt = f"orders_bkt_{run}", f"lineitem_bkt_{run}"
@@ -153,8 +151,15 @@ def bucketed_orders_lineitem_join(spark: SparkSession, sf_dir: str) -> DataFrame
             load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice"),
             lt, "l_orderkey", path=os.path.join(root, "lineitem"),
         )
-        _BUCKETED_MEMO[key] = (ot, lt)
-    ot, lt = _BUCKETED_MEMO[key]
+        return ot, lt
+
+    ot, lt = _memoized(
+        spark,
+        lambda: ("bucketed",)
+        + memo_key(spark, sf_dir, "orders")
+        + memo_key(spark, sf_dir, "lineitem"),
+        build,
+    )
     j = bucketed_join(spark, ot, lt, "o_orderkey", "l_orderkey")
     return j.groupBy("o_orderpriority").agg(
         F.count("*").cast("long").alias("n_items"),

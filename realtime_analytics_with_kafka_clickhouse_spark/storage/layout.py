@@ -197,7 +197,16 @@ def update_rows(
     return touched
 
 
-_MUTATION_TABLE_MEMO: dict[tuple, str] = {}
+def _raw_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``orders`` under the reference's raw-table column names."""
+    from ..sources.tables import load_table
+
+    return load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("order_id"),
+        F.col("o_custkey").alias("customer_id"),
+        F.col("o_orderdate").alias("order_timestamp"),
+        F.col("o_totalprice").alias("total_amount"),
+    )
 
 
 def order_update_mutation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,18 +221,13 @@ def order_update_mutation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the rewrite touches only partitions holding the
     subject's rows (bounded by orders-per-customer); the audit is one
-    month-keyed aggregate."""
+    month-keyed aggregate.  The mutated table builds once per orders
+    ``memo_key``."""
     from ..functions.scalars import dsum
-    from ..sources.tables import load_table, memo_key
+    from ..sources.tables import build_once
 
-    key = memo_key(spark, sf_dir, "orders")
-    if key not in _MUTATION_TABLE_MEMO:
-        orders = load_table(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("order_id"),
-            F.col("o_custkey").alias("customer_id"),
-            F.col("o_orderdate").alias("order_timestamp"),
-            F.col("o_totalprice").alias("total_amount"),
-        )
+    def build() -> str:
+        orders = _raw_orders(spark, sf_dir)
         victim = orders.agg(F.min("customer_id")).collect()[0][0]
         table = scratch_dir("mutation", "orders")
         write_orders_table(orders, table)
@@ -233,8 +237,11 @@ def order_update_mutation(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"customer_id = {victim}",
             {"total_amount": "total_amount + 10.0"},
         )
-        _MUTATION_TABLE_MEMO[key] = table
-    mutated = read_orders_table(spark, _MUTATION_TABLE_MEMO[key])
+        return table
+
+    mutated = read_orders_table(
+        spark, build_once(spark, sf_dir, ("orders",), "mutation_table", build)
+    )
     return mutated.groupBy(
         F.col("order_month").cast("long").alias("order_month")
     ).agg(
@@ -283,11 +290,6 @@ def expire_ttl(spark: SparkSession, path: str, cutoff_ts: str) -> list[str]:
     return touched
 
 
-# GDPR-audit memo: the partitioned copy + targeted delete build once per
-# orders ``memo_key``; repeat calls audit the already-mutated table.
-_GDPR_TABLE_MEMO: dict[tuple, str] = {}
-
-
 def gdpr_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The GDPR / right-to-be-forgotten pass, end-to-end and
     driver-verified: reshape ``orders`` into the reference's
@@ -300,24 +302,23 @@ def gdpr_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the delete rewrites only the partitions holding the
     subject's rows — bounded by orders-per-customer, NOT table size (the
     predicate pushes to the parquet scan to find them); the audit is one
-    month-keyed aggregate."""
-    from ..sources.tables import load_table, memo_key
+    month-keyed aggregate.  The partitioned copy and the targeted delete
+    build once per orders ``memo_key``; repeat calls audit the
+    already-mutated table."""
+    from ..sources.tables import build_once
     from ..functions.scalars import dsum
 
-    key = memo_key(spark, sf_dir, "orders")
-    if key not in _GDPR_TABLE_MEMO:
-        orders = load_table(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("order_id"),
-            F.col("o_custkey").alias("customer_id"),
-            F.col("o_orderdate").alias("order_timestamp"),
-            F.col("o_totalprice").alias("total_amount"),
-        )
+    def build() -> str:
+        orders = _raw_orders(spark, sf_dir)
         victim = orders.agg(F.min("customer_id")).collect()[0][0]
         table = scratch_dir("gdpr", "orders")
         write_orders_table(orders, table)
         delete_rows(spark, table, f"customer_id = {victim}")
-        _GDPR_TABLE_MEMO[key] = table
-    surviving = read_orders_table(spark, _GDPR_TABLE_MEMO[key])
+        return table
+
+    surviving = read_orders_table(
+        spark, build_once(spark, sf_dir, ("orders",), "gdpr_table", build)
+    )
     return surviving.groupBy(
         F.col("order_month").cast("long").alias("order_month")
     ).agg(
@@ -392,9 +393,6 @@ def expire_ttl_group_by(
     return touched
 
 
-_BACKFILL_TABLE_MEMO: dict[tuple, str] = {}
-
-
 def dynamic_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic-partition-overwrite BACKFILL (NEW r6): the idempotent
     correction pattern — a corrected batch covering some months is
@@ -408,19 +406,13 @@ def dynamic_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Proof: the two earliest months are 'corrected' to doubled totals;
     the driver row must equal the oracle's piecewise recompute, and the
-    pytest pins that untouched month dirs keep their files/mtime."""
+    pytest pins that untouched month dirs keep their files/mtime.  The
+    backfilled table builds once per orders ``memo_key``."""
     from ..functions.scalars import dsum
-    from ..operators.normalize import with_partition_month
-    from ..sources.tables import load_table, memo_key
+    from ..sources.tables import build_once
 
-    key = memo_key(spark, sf_dir, "orders")
-    if key not in _BACKFILL_TABLE_MEMO:
-        orders = load_table(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("order_id"),
-            F.col("o_custkey").alias("customer_id"),
-            F.col("o_orderdate").alias("order_timestamp"),
-            F.col("o_totalprice").alias("total_amount"),
-        )
+    def build() -> str:
+        orders = _raw_orders(spark, sf_dir)
         table = scratch_dir("backfill", "orders")
         write_orders_table(orders, table)
         months = [
@@ -448,8 +440,9 @@ def dynamic_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.conf.unset(mode_key)
             else:
                 spark.conf.set(mode_key, old_mode)
-        _BACKFILL_TABLE_MEMO[key] = table
-    table = _BACKFILL_TABLE_MEMO[key]
+        return table
+
+    table = build_once(spark, sf_dir, ("orders",), "backfill_table", build)
     return (
         read_orders_table(spark, table)
         .groupBy(F.col("order_month").cast("long").alias("order_month"))
@@ -488,10 +481,6 @@ def move_partitions_to_volume(
     return touched
 
 
-# Tiering memo: the hot/cold pair builds + tiers once per orders
-# ``memo_key``; repeat calls audit the already-tiered volumes.
-_TIER_TABLE_MEMO: dict[tuple, tuple[str, str]] = {}
-
 # Month-start cutoff so the boundary is exact: every pre-1999 month is
 # fully expired (moves whole), 199901+ fully hot.  Orders span
 # 1995-01..2001-08 at every SF, so both volumes are non-empty everywhere.
@@ -512,26 +501,23 @@ def ttl_move_tiering(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the move is one rename per expired partition (metadata-
     only, no data IO — the point of volume tiering at 100 TB); the audit
-    is one month-keyed aggregate over a two-volume union scan."""
+    is one month-keyed aggregate over a two-volume union scan.  The
+    hot/cold pair builds and tiers once per orders ``memo_key``; repeat
+    calls audit the already-tiered volumes."""
     from ..functions.scalars import dsum
-    from ..sources.tables import load_table, memo_key
+    from ..sources.tables import build_once
 
-    key = memo_key(spark, sf_dir, "orders")
-    if key not in _TIER_TABLE_MEMO:
-        orders = load_table(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("order_id"),
-            F.col("o_custkey").alias("customer_id"),
-            F.col("o_orderdate").alias("order_timestamp"),
-            F.col("o_totalprice").alias("total_amount"),
-        )
+    def build() -> tuple[str, str]:
+        orders = _raw_orders(spark, sf_dir)
         root = scratch_dir("tiering", "t")
         hot, cold = f"{root}/hot", f"{root}/cold"
         write_orders_table(orders, hot)
         moved = move_partitions_to_volume(spark, hot, cold, TIER_CUTOFF_TS)
         if not moved:
             raise RuntimeError("tiering must relocate the expired months")
-        _TIER_TABLE_MEMO[key] = (hot, cold)
-    hot, cold = _TIER_TABLE_MEMO[key]
+        return hot, cold
+
+    hot, cold = build_once(spark, sf_dir, ("orders",), "tier_tables", build)
     both = spark.read.parquet(hot).select(
         F.lit("hot").alias("tier"), "order_month", "total_amount"
     ).unionByName(

@@ -37,10 +37,31 @@ from ..operators.rollups import (
     single_partition,
 )
 from ..operators._memo import scratch_dir
-from ..sources.tables import load_table, memo_key, prepared
+from ..sources.tables import build_once, load_table, prepared
 from ..storage import fs
 
 ROLLUP_KEYS = ["hour", "category"]
+
+
+def _epoch(events: DataFrame, i: int) -> DataFrame:
+    """Arrival epoch ``i`` of the 4-epoch replays: event_id mod 4, out of
+    time order, so every epoch holds 'late' events."""
+    return events.filter(F.pmod(F.col("event_id"), F.lit(4)) == i)
+
+
+def _a1_epochs(events: DataFrame) -> list[tuple[DataFrame, int]]:
+    """The 4 epochs' A1 partials as ``txlog.append_many_tx`` batches."""
+    return [(hourly_rollup_aggregate(_epoch(events, i)), i) for i in range(4)]
+
+
+def _resum_a1(df: DataFrame) -> DataFrame:
+    """A1 partials re-summed per (hour, category)."""
+    return df.groupBy(*ROLLUP_KEYS).agg(
+        F.sum("order_count").alias("order_count"),
+        dsum("total_revenue").alias("total_revenue"),
+        F.sum("total_quantity").alias("total_quantity"),
+    )
+
 
 # Marker file recorded inside the rollup directory after each merged batch:
 # makes foreachBatch replay (post-crash re-delivery of the same epoch)
@@ -160,8 +181,9 @@ def incremental_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         rollup_dir = _fresh_rollup_dir("sales_by_category_hourly")
         for i in range(4):
-            chunk = events.filter(F.pmod(F.col("event_id"), F.lit(4)) == i)
-            merge_rollup(spark, rollup_dir, hourly_rollup_aggregate(chunk), batch_id=i)
+            merge_rollup(
+                spark, rollup_dir, hourly_rollup_aggregate(_epoch(events, i)), batch_id=i
+            )
         return spark.read.parquet(rollup_dir)
     finally:
         events.unpersist(blocking=False)
@@ -179,11 +201,10 @@ def incremental_daily_region_rollup(spark: SparkSession, sf_dir: str) -> DataFra
         keys = ["date", "region"]
         sums = [("order_count", "long"), ("total_revenue", "money")]
         for i in range(4):
-            chunk = events.filter(F.pmod(F.col("event_id"), F.lit(4)) == i)
             merge_rollup(
                 spark,
                 rollup_dir,
-                daily_region_rollup_aggregate(chunk),
+                daily_region_rollup_aggregate(_epoch(events, i)),
                 batch_id=i,
                 keys=keys,
                 sums=sums,
@@ -203,8 +224,9 @@ def _build_txlog_rollup(spark: SparkSession, sf_dir: str) -> str:
     try:
         table = _fresh_rollup_dir("sales_by_category_hourly_tx")
         for i in range(4):
-            chunk = events.filter(F.pmod(F.col("event_id"), F.lit(4)) == i)
-            txlog.merge_rollup_tx(spark, table, hourly_rollup_aggregate(chunk), batch_id=i)
+            txlog.merge_rollup_tx(
+                spark, table, hourly_rollup_aggregate(_epoch(events, i)), batch_id=i
+            )
         txlog.vacuum(spark, table, keep_versions=1)
         return table
     finally:
@@ -235,32 +257,13 @@ def compacted_rollup_txlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-then-OPTIMIZE == batch aggregation."""
     from ..storage import txlog
 
-    def resum(df: DataFrame) -> DataFrame:
-        return df.groupBy(*ROLLUP_KEYS).agg(
-            F.sum("order_count").alias("order_count"),
-            dsum("total_revenue").alias("total_revenue"),
-            F.sum("total_quantity").alias("total_quantity"),
-        )
-
     events = load_table(spark, sf_dir, "events").persist()
     try:
         table = _fresh_rollup_dir("sales_by_category_hourly_opt")
         # 4 independent arrival epochs: stage the data dirs concurrently,
         # commit one version per batch in order (§2.6; identical commits)
-        txlog.append_many_tx(
-            spark,
-            table,
-            [
-                (
-                    hourly_rollup_aggregate(
-                        events.filter(F.pmod(F.col("event_id"), F.lit(4)) == i)
-                    ),
-                    i,
-                )
-                for i in range(4)
-            ],
-        )
-        compacted = txlog.compact_tx(spark, table, agg=resum)
+        txlog.append_many_tx(spark, table, _a1_epochs(events))
+        compacted = txlog.compact_tx(spark, table, agg=_resum_a1)
         if not compacted:
             raise RuntimeError("4 appended epochs must leave >1 dir to compact")
         txlog.vacuum(spark, table, keep_versions=1)
@@ -272,15 +275,6 @@ def compacted_rollup_txlog(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.unpersist(blocking=False)
 
 
-# Stored-MV memo for accelerator reads: maintenance happens ONCE on the
-# write path (first call); dashboard reads then hit the stored table only —
-# that separation IS the accelerator semantics (a dashboard query does not
-# rebuild the MV it reads).  Keyed like the session plan memo
-# (``sources.tables.memo_key``): a table rewritten at the same path, or a
-# new session time zone, rebuilds the rollup.
-_STORED_ROLLUP_MEMO: dict[tuple, str] = {}
-
-
 def hourly_trend_from_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rollup-as-accelerator routing (SURVEY.md §4): the A8 dashboard trend
     answered from the STORED incremental rollup table — sum across
@@ -290,14 +284,20 @@ def hourly_trend_from_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A prepared panel (``operators.rollups`` "Scale notes"): the stored
     rollup's txlog is read once per prepared plan, and a one-partition
-    rollup scan is re-summed in a single task."""
+    rollup scan is re-summed in a single task.
+
+    The stored rollup itself is built once per events ``memo_key``
+    (``build_once``): maintenance happens on the write path, and a
+    dashboard read never rebuilds the MV it reads; a table rewritten at the
+    same path, or a new session time zone, rebuilds it."""
     from ..storage import txlog
 
     def build() -> DataFrame:
-        key = memo_key(spark, sf_dir, "events")
-        if key not in _STORED_ROLLUP_MEMO:
-            _STORED_ROLLUP_MEMO[key] = _build_txlog_rollup(spark, sf_dir)
-        stored = txlog.read_table(spark, _STORED_ROLLUP_MEMO[key])
+        table = build_once(
+            spark, sf_dir, ("events",), "stored_rollup",
+            lambda: _build_txlog_rollup(spark, sf_dir),
+        )
+        stored = txlog.read_table(spark, table)
         return single_partition(stored).groupBy("hour").agg(
             F.sum("order_count").alias("order_count"),
             dsum("total_revenue").alias("total_revenue"),
@@ -744,11 +744,6 @@ def stream_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Deterministic replay source files, written once per (tag,) + the
-# ``memo_key`` of the table they copy, so a rewritten table is copied anew.
-_REPLAY_SRC_MEMO: dict = {}
-
-
 def _replay_events_stream(spark: SparkSession, sf_dir: str, op, prefix: str) -> str:
     """Shared replay harness for driver-gated streaming queries: write
     ``events`` as 2 TIME-ORDERED chunk files, run ``op`` (stream ->
@@ -761,17 +756,13 @@ def _replay_events_stream(spark: SparkSession, sf_dir: str, op, prefix: str) -> 
     handoff — 2 data batches + the final watermark-advance batch.
     Sequential writes -> ascending file mtimes = replay order.
 
-    The chunk FILES are deterministic per sf_dir, so they write once per
-    session (_REPLAY_SRC_MEMO); the stream itself — checkpoint, state,
+    The chunk FILES are deterministic per events ``memo_key``, so they
+    write once (``build_once``); the stream itself — checkpoint, state,
     sink — runs fresh every call, so the measured cost stays the real
     streaming cost."""
     import datetime as _dt
 
-    ckpt, name = _stream_run(prefix)
-    key = ("replay",) + memo_key(spark, sf_dir, "events")
-    memo = _REPLAY_SRC_MEMO.get(key)
-    src = memo["src"] if memo else None
-    if src is None:
+    def write_src() -> dict:
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "value", "props", "event_type"
         ).persist()  # each chunk write filters this one cached scan
@@ -790,15 +781,17 @@ def _replay_events_stream(spark: SparkSession, sf_dir: str, op, prefix: str) -> 
         # they are properties of the just-written immutable chunk files,
         # and re-deriving them per call costs a schema inference plus a
         # count job for every streaming proof in the session.
-        memo = {
+        return {
             "src": src,
             "schema": spark.read.parquet(src).schema,
             "n_events": spark.read.parquet(src).count(),
         }
-        _REPLAY_SRC_MEMO[key] = memo
+
+    ckpt, name = _stream_run(prefix)
+    memo = build_once(spark, sf_dir, ("events",), "replay_src", write_src)
     stream = spark.readStream.schema(memo["schema"]).option(
         "maxFilesPerTrigger", 1
-    ).parquet(src)
+    ).parquet(memo["src"])
     # State-partition count is fixed at stream START (it shapes the state
     # store layout for the query's lifetime), so size it to the replay
     # volume: each partition costs a state-store open + Arrow round-trip
@@ -842,40 +835,24 @@ def stream_windowed_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# Append-table memo for the time-travel query: versions must SURVIVE the
-# call (no vacuum), so the table builds once per events ``memo_key`` and
-# every read — current or historical — hits the stored log.
-_APPEND_TABLE_MEMO: dict[tuple, str] = {}
-
-
 def _build_txlog_append_table(spark: SparkSession, sf_dir: str) -> str:
     """4 out-of-order micro-batches APPENDed as O(1) add-file commits
     (versions 1..4), NO compaction and NO vacuum — the full version
-    history stays readable."""
+    history stays readable.  Versions must SURVIVE the call, so the table
+    builds once per events ``memo_key`` and every read — current or
+    historical — hits the stored log."""
     from ..storage import txlog
 
-    key = memo_key(spark, sf_dir, "events")
-    if key not in _APPEND_TABLE_MEMO:
+    def build() -> str:
         events = load_table(spark, sf_dir, "events").persist()
         try:
             table = _fresh_rollup_dir("sales_by_category_hourly_hist")
-            txlog.append_many_tx(
-                spark,
-                table,
-                [
-                    (
-                        hourly_rollup_aggregate(
-                            events.filter(F.pmod(F.col("event_id"), F.lit(4)) == i)
-                        ),
-                        i,
-                    )
-                    for i in range(4)
-                ],
-            )
-            _APPEND_TABLE_MEMO[key] = table
+            txlog.append_many_tx(spark, table, _a1_epochs(events))
+            return table
         finally:
             events.unpersist(blocking=False)
-    return _APPEND_TABLE_MEMO[key]
+
+    return build_once(spark, sf_dir, ("events",), "txlog_append_table", build)
 
 
 def txlog_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -890,44 +867,28 @@ def txlog_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     the restore commit, not a data rewrite, is what readers see).
 
     Scale shape: restore cost is one manifest read + one O(1) commit —
-    independent of table size (the Delta RESTORE contract)."""
+    independent of table size (the Delta RESTORE contract).  The restored
+    table builds once per events ``memo_key``."""
     from ..storage import txlog
 
-    key = memo_key(spark, sf_dir, "events")
-    if key not in _RESTORE_TABLE_MEMO:
+    def build() -> str:
         events = load_table(spark, sf_dir, "events").persist()
         try:
             table = _fresh_rollup_dir("sales_by_category_hourly_restore")
-            txlog.append_many_tx(
-                spark,
-                table,
-                [
-                    (
-                        hourly_rollup_aggregate(
-                            events.filter(F.pmod(F.col("event_id"), F.lit(4)) == i)
-                        ),
-                        i,
-                    )
-                    for i in range(4)
-                ],
-            )
+            txlog.append_many_tx(spark, table, _a1_epochs(events))
             new_v = txlog.restore_tx(spark, table, 2)
             if new_v != 5:
                 raise RuntimeError(f"restore must commit version 5, got {new_v}")
-            _RESTORE_TABLE_MEMO[key] = table
+            return table
         finally:
             events.unpersist(blocking=False)
-    out = txlog.read_table(spark, _RESTORE_TABLE_MEMO[key])
+
+    out = txlog.read_table(
+        spark, build_once(spark, sf_dir, ("events",), "txlog_restore_table", build)
+    )
     if out is None:
         raise RuntimeError("restored table unreadable")
-    return out.groupBy(*ROLLUP_KEYS).agg(
-        F.sum("order_count").alias("order_count"),
-        dsum("total_revenue").alias("total_revenue"),
-        F.sum("total_quantity").alias("total_quantity"),
-    )
-
-
-_RESTORE_TABLE_MEMO: dict[tuple, str] = {}
+    return _resum_a1(out)
 
 
 def table_parts_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -982,11 +943,7 @@ def txlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     at_v2 = txlog.read_table_at(spark, table, 2)
     if at_v2 is None:
         raise RuntimeError("version 2 must exist in the un-vacuumed log")
-    return at_v2.groupBy(*ROLLUP_KEYS).agg(
-        F.sum("order_count").alias("order_count"),
-        dsum("total_revenue").alias("total_revenue"),
-        F.sum("total_quantity").alias("total_quantity"),
-    )
+    return _resum_a1(at_v2)
 
 
 def txlog_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,19 +964,7 @@ def txlog_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").persist()
     try:
         table = _fresh_rollup_dir("vacuum_proof")
-        txlog.append_many_tx(
-            spark,
-            table,
-            [
-                (
-                    hourly_rollup_aggregate(
-                        events.filter(F.pmod(F.col("event_id"), F.lit(4)) == i)
-                    ),
-                    i,
-                )
-                for i in range(4)
-            ],
-        )
+        txlog.append_many_tx(spark, table, _a1_epochs(events))
         deleted = txlog.vacuum(spark, table, keep_versions=2)
         if not deleted:
             raise RuntimeError("vacuum must reclaim the 2 out-of-horizon epochs")
@@ -1071,16 +1016,17 @@ def stream_join_orders_acks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("ok").alias("ack_status"),
     )
     ckpt, name = _stream_run("ssjoin")
+
     # Deterministic source files write once per orders ``memo_key``; the
     # stream (checkpoint, join state, sink) runs fresh every call.
-    key = ("ssjoin",) + memo_key(spark, sf_dir, "orders")
-    if key not in _REPLAY_SRC_MEMO:
+    def write_src() -> tuple[str, str]:
         src = scratch_dir("inc_rollups", "ssjoin-src")
         o_src, a_src = os.path.join(src, "orders"), os.path.join(src, "acks")
         orders.coalesce(1).write.parquet(o_src)
         acks.coalesce(1).write.parquet(a_src)
-        _REPLAY_SRC_MEMO[key] = (o_src, a_src)
-    o_src, a_src = _REPLAY_SRC_MEMO[key]
+        return o_src, a_src
+
+    o_src, a_src = build_once(spark, sf_dir, ("orders",), "ssjoin_src", write_src)
     o_stream = spark.readStream.schema(orders.schema).parquet(o_src)
     a_stream = spark.readStream.schema(acks.schema).parquet(a_src)
     # Stream-stream join keeps FOUR state stores per partition (2 sides x
@@ -1108,20 +1054,16 @@ def stream_join_orders_acks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Time-chunked append table for the zone-map skipping proof: (path, b1, b2)
-# per events ``memo_key``, where [b1, b2) is the second epoch-hour quarter.
-_PRUNED_TABLE_MEMO: dict[tuple, tuple[str, int, int]] = {}
-
-
 def _build_time_chunked_txlog(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
     """Append the A1 rollup as 4 TIME-RANGE chunks (disjoint epoch-hour
     quarters) with `hour_epoch` zone maps — the layout where data skipping
     has something to skip (the mod-4 chunks of the other txlog queries all
-    overlap in time, so their zone maps overlap too)."""
+    overlap in time, so their zone maps overlap too).  Returns (path, b1,
+    b2), where [b1, b2) is the second epoch-hour quarter; built once per
+    events ``memo_key``."""
     from ..storage import txlog
 
-    key = memo_key(spark, sf_dir, "events")
-    if key not in _PRUNED_TABLE_MEMO:
+    def build() -> tuple[str, int, int]:
         agg = hourly_rollup_aggregate(load_table(spark, sf_dir, "events")).withColumn(
             "hour_epoch", F.expr("unix_seconds(hour) DIV 3600")
         ).persist()
@@ -1146,10 +1088,11 @@ def _build_time_chunked_txlog(spark: SparkSession, sf_dir: str) -> tuple[str, in
                 ],
                 stats_cols=["hour_epoch"],
             )
-            _PRUNED_TABLE_MEMO[key] = (table, bounds[1], bounds[2])
+            return table, bounds[1], bounds[2]
         finally:
             agg.unpersist(blocking=False)
-    return _PRUNED_TABLE_MEMO[key]
+
+    return build_once(spark, sf_dir, ("events",), "txlog_time_chunked", build)
 
 
 def txlog_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1237,9 +1180,6 @@ def explain_estimate_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Z-ordered orders txlog per orders ``memo_key``: table path memo.
-_ZORDER_TABLE_MEMO: dict[tuple, str] = {}
-
 # Fixed predicate windows (absolute, so the oracle is plain SQL at any
 # SF): a low-custkey slice x a mid-price band.  Non-empty from sf0.001 up.
 _ZO_CK = (10, 60)
@@ -1251,11 +1191,10 @@ def _build_zorder_txlog(spark: SparkSession, sf_dir: str) -> str:
     maps on both query columns are full-span — nothing prunable), then
     OPTIMIZE ZORDER BY (o_custkey, o_totalprice): 8 directories ordered
     by the interleaved equi-depth ranks, each with a TIGHT zone map on
-    both columns."""
+    both columns.  Built once per orders ``memo_key``."""
     from ..storage import txlog
 
-    key = memo_key(spark, sf_dir, "orders")
-    if key not in _ZORDER_TABLE_MEMO:
+    def build() -> str:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
         )
@@ -1272,8 +1211,9 @@ def _build_zorder_txlog(spark: SparkSession, sf_dir: str) -> str:
         txlog.compact_tx_zorder(
             spark, table, ["o_custkey", "o_totalprice"], n_buckets=8, levels=8
         )
-        _ZORDER_TABLE_MEMO[key] = table
-    return _ZORDER_TABLE_MEMO[key]
+        return table
+
+    return build_once(spark, sf_dir, ("orders",), "txlog_zorder_table", build)
 
 
 def txlog_zorder_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1323,9 +1263,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     afford (a global dropDuplicates would hold every id ever seen)."""
     import datetime as _dt
 
-    ckpt, name = _stream_run("sdedup")
-    key = ("sdedup",) + memo_key(spark, sf_dir, "events")
-    if key not in _REPLAY_SRC_MEMO:
+    def write_src() -> tuple[str, T.StructType]:
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "value"
         ).persist()
@@ -1344,8 +1282,10 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             events.unpersist(blocking=False)
         # schema memoized with the path: immutable chunk files, and the
         # per-call re-inference is a driver footer pass (r14 optimization)
-        _REPLAY_SRC_MEMO[key] = (src, spark.read.parquet(src).schema)
-    src, schema = _REPLAY_SRC_MEMO[key]
+        return src, spark.read.parquet(src).schema
+
+    ckpt, name = _stream_run("sdedup")
+    src, schema = build_once(spark, sf_dir, ("events",), "sdedup_src", write_src)
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
     deduped = stream.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
         ["event_id"]
@@ -1476,8 +1416,7 @@ def _events_2chunk_src(spark: SparkSession, sf_dir: str) -> str:
     files (event_id mod 2) — the replay source for cross-batch state
     proofs (membership the oracle can reproduce, unlike a timestamp
     midpoint)."""
-    key = ("twschunks",) + memo_key(spark, sf_dir, "events")
-    if key not in _REPLAY_SRC_MEMO:
+    def write_src() -> str:
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "value"
         ).persist()
@@ -1489,8 +1428,9 @@ def _events_2chunk_src(spark: SparkSession, sf_dir: str) -> str:
                 ).write.mode("append").parquet(src)
         finally:
             events.unpersist(blocking=False)
-        _REPLAY_SRC_MEMO[key] = src
-    return _REPLAY_SRC_MEMO[key]
+        return src
+
+    return build_once(spark, sf_dir, ("events",), "tws_src", write_src)
 
 
 def statestore_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2089,9 +2029,7 @@ def txlog_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         table = _fresh_rollup_dir("sales_hourly_evolving")
         epochs = []
         for i in range(4):
-            agg = hourly_rollup_aggregate(
-                events.filter(F.pmod(F.col("event_id"), F.lit(4)) == i)
-            )
+            agg = hourly_rollup_aggregate(_epoch(events, i))
             if i < 2:
                 agg = agg.drop("total_quantity")
             epochs.append((agg, i))
@@ -2110,19 +2048,14 @@ def txlog_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.unpersist(blocking=False)
 
 
-# User-range-chunked append table for the bloom-skipping proof: (path,
-# probe_user) per events ``memo_key``.
-_BLOOM_TABLE_MEMO: dict[tuple, tuple[str, int]] = {}
-
-
 def _build_user_chunked_txlog(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """Append events as 4 user-RANGE chunks (each user's rows live in
     exactly one directory — the clustered-by-user layout where a bloom
-    probe has something to skip) with a user_id bloom per directory."""
+    probe has something to skip) with a user_id bloom per directory.
+    Returns (path, probe_user); built once per events ``memo_key``."""
     from ..storage import txlog
 
-    key = memo_key(spark, sf_dir, "events")
-    if key not in _BLOOM_TABLE_MEMO:
+    def build() -> tuple[str, int]:
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "value"
         ).persist()
@@ -2147,10 +2080,11 @@ def _build_user_chunked_txlog(spark: SparkSession, sf_dir: str) -> tuple[str, in
                 ],
                 bloom_cols=["user_id"],
             )
-            _BLOOM_TABLE_MEMO[key] = (table, int(lo))
+            return table, int(lo)
         finally:
             events.unpersist(blocking=False)
-    return _BLOOM_TABLE_MEMO[key]
+
+    return build_once(spark, sf_dir, ("events",), "txlog_user_bloom_table", build)
 
 
 def txlog_bloom_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2312,15 +2246,16 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.col("o_totalprice").alias("total_amount"),
     )
-    key = ("senrich",) + memo_key(spark, sf_dir, "orders")
-    if key not in _REPLAY_SRC_MEMO:
+
+    def write_src() -> str:
         src = os.path.join(scratch_dir("inc_rollups", "senrich-src"), "orders")
         for i in (0, 1):
             orders.filter(F.pmod(F.col("order_id"), F.lit(2)) == i).coalesce(
                 1
             ).write.mode("append").parquet(src)
-        _REPLAY_SRC_MEMO[key] = src
-    src = _REPLAY_SRC_MEMO[key]
+        return src
+
+    src = build_once(spark, sf_dir, ("orders",), "senrich_src", write_src)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_nationkey"
     )
@@ -2374,7 +2309,7 @@ def aggregating_merge_sketch_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             table,
             [
                 (
-                    events.filter(F.pmod(F.col("event_id"), F.lit(4)) == i)
+                    _epoch(events, i)
                     .groupBy(day, F.date_trunc("hour", "ts").alias("hour"))
                     .agg(F.hll_sketch_agg("user_id", 14).alias("sk")),
                     i,
@@ -2482,8 +2417,8 @@ def stream_join_orders_acks_outer(spark: SparkSession, sf_dir: str) -> DataFrame
         F.lit("ok").alias("ack_status"),
     )
     ckpt, name = _stream_run("ssjoino")
-    key = ("ssjoino",) + memo_key(spark, sf_dir, "orders")
-    if key not in _REPLAY_SRC_MEMO:
+
+    def write_src() -> tuple[str, str]:
         far = orders.agg(
             (F.max("order_timestamp") + F.expr("INTERVAL 30 DAYS")).alias("t")
         ).collect()[0]["t"]
@@ -2499,8 +2434,9 @@ def stream_join_orders_acks_outer(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         sentinel_o.coalesce(1).write.mode("append").parquet(o_src)
         sentinel_a.coalesce(1).write.mode("append").parquet(a_src)
-        _REPLAY_SRC_MEMO[key] = (o_src, a_src)
-    o_src, a_src = _REPLAY_SRC_MEMO[key]
+        return o_src, a_src
+
+    o_src, a_src = build_once(spark, sf_dir, ("orders",), "ssjoino_src", write_src)
     o_stream = spark.readStream.schema(orders.schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(o_src)
@@ -2541,11 +2477,7 @@ def txlog_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = txlog.read_changes_between(spark, table, 1, 3)
     if changes is None:
         raise RuntimeError("versions 1 and 3 must exist")
-    return changes.groupBy(*ROLLUP_KEYS).agg(
-        F.sum("order_count").alias("order_count"),
-        dsum("total_revenue").alias("total_revenue"),
-        F.sum("total_quantity").alias("total_quantity"),
-    )
+    return _resum_a1(changes)
 
 
 def merge_versioned_collapsing(
@@ -2791,7 +2723,7 @@ def percentile_kll_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             table,
             [
                 (
-                    events.filter(F.pmod(F.col("event_id"), F.lit(4)) == i)
+                    _epoch(events, i)
                     .groupBy("event_type")
                     .agg(F.kll_sketch_agg_double("value", F.lit(KLL_K)).alias("sk")),
                     i,
@@ -2874,7 +2806,7 @@ def percentile_merge_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             table,
             [
                 (
-                    events.filter(F.pmod(F.col("event_id"), F.lit(4)) == i)
+                    _epoch(events, i)
                     .groupBy(day, bucket)
                     .agg(F.count("*").alias("n")),
                     i,

@@ -7,6 +7,7 @@ rewritten at the same path.  These tests pin the invalidation contract.
 
 from __future__ import annotations
 
+import ast
 import importlib
 import os
 import re
@@ -17,6 +18,7 @@ import tempfile
 import time
 from pathlib import Path
 
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
@@ -128,9 +130,15 @@ def test_missing_table_is_never_memoized(spark, tmp_path):
 
 
 def _double_column(path: str, column: str) -> None:
+    """Numbers times two; strings twice over, joined by a space."""
     t = pq.read_table(path)
     i = t.schema.get_field_index(column)
-    t = t.set_column(i, t.field(i), pc.multiply(t.column(i), 2))
+    col = t.column(i)
+    if pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
+        doubled = pc.binary_join_element_wise(col, col, " ")
+    else:
+        doubled = pc.multiply(col, 2)
+    t = t.set_column(i, t.field(i), doubled)
     os.remove(path)  # fixture copies keep the read-only mode
     pq.write_table(t, path)
 
@@ -140,6 +148,7 @@ def _double_column(path: str, column: str) -> None:
     [
         ("storage.layout", "order_update_mutation", "orders", "o_totalprice"),
         ("streaming.pipeline", "txlog_restore_version", "events", "value"),
+        ("operators.text", "bpe_train_merges", "documents", "text"),
     ],
 )
 def test_build_once_table_rebuilds_after_rewrite(
@@ -199,6 +208,102 @@ def test_clean_exit_leaves_no_scratch_root(tmp_path):
     assert len(out) == len(areas)
     assert all(d.startswith(str(tmp_path)) for d in out)
     assert [n for n in os.listdir(tmp_path) if n.startswith("spark_graft_")] == []
+
+
+def test_bucketed_join_survives_a_session_restart(tmp_path):
+    """The bucketed tables are named in the session's catalog, so a new
+    session after ``spark.stop()`` in the same process must write and name
+    them anew instead of reading names its catalog never had."""
+    code = (
+        "from realtime_analytics_with_kafka_clickhouse_spark.session import get_spark\n"
+        "from realtime_analytics_with_kafka_clickhouse_spark.storage.bucketing "
+        "import bucketed_orders_lineitem_join as op\n"
+        "rows = []\n"
+        "for _ in range(2):\n"
+        "    spark = get_spark('restart', shuffle_partitions=2)\n"
+        f"    rows.append(sorted(op(spark, {SF_DIR!r}).collect()))\n"
+        "    spark.stop()\n"
+        "print(len(rows[0]), rows[0] == rows[1])\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        env={
+            **os.environ,
+            "TMPDIR": str(tmp_path),
+            "SPARK_GRAFT_CPUS": "2",
+            "SPARK_GRAFT_DRIVER_MEM": "1g",
+        },
+        cwd=Path(__file__).parents[1],
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    n_rows, equal = out.stdout.split()[-2:]
+    assert int(n_rows) > 0 and equal == "True"
+
+
+def _module_caches(tree: ast.Module) -> set[str]:
+    """Names bound to ``{}`` at module level and never filled there: dicts
+    that functions fill at run time."""
+    empty = {
+        t.id
+        for node in tree.body
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        and isinstance(node.value, ast.Dict)
+        and not node.value.keys
+        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+    }
+    filled = {
+        t.value.id
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        for t in node.targets
+        if isinstance(t, ast.Subscript) and isinstance(t.value, ast.Name)
+    }
+    return empty - filled
+
+
+def test_build_once_values_live_in_the_two_stores(spark, tmp_path, monkeypatch):
+    """Module-level run-time dicts are only ``_memo``'s store and timings,
+    the executor's corpus slot and the txlog's content-addressed caches; a
+    call that builds once records each kind it builds in ``BUILD_SEC``."""
+    pkg = Path(_memo.__file__).parents[1]
+    caches = {
+        f"{f.stem}.{name}"
+        for f in pkg.rglob("*.py")
+        for name in _module_caches(ast.parse(f.read_text()))
+    }
+    assert caches == {
+        "_memo._MEMO",
+        "_memo.BUILD_SEC",
+        "similarity._CORPUS",
+        "txlog._COMMIT_MEMO",
+        "txlog._DIRS_SCHEMA_MEMO",
+    }
+    assert "_session_token" not in (pkg / "sources" / "files.py").read_text()
+
+    from realtime_analytics_with_kafka_clickhouse_spark.operators import text
+    from realtime_analytics_with_kafka_clickhouse_spark.sources import files
+    from realtime_analytics_with_kafka_clickhouse_spark.streaming import pipeline
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    for f in os.listdir(SF_DIR):
+        shutil.copyfile(f"{SF_DIR}/{f}", d / f)
+    monkeypatch.setattr(_memo, "_MEMO", {})
+    monkeypatch.setattr(_memo, "BUILD_SEC", {})
+    calls = {
+        pipeline.hourly_trend_from_rollup: {"stored_rollup"},
+        pipeline.txlog_time_travel: {"txlog_append_table"},
+        files.json_roundtrip_rollup: {"events_json_mirror"},
+        text.bpe_tokenize_stats: {"bpe_merges"},
+    }
+    for fn, kinds in calls.items():
+        before = set(_memo.BUILD_SEC)
+        fn(spark, str(d)).collect()
+        assert set(_memo.BUILD_SEC) - before == kinds, fn.__name__
+    assert {k[0] for k in _memo._MEMO} == set(_memo.BUILD_SEC)
 
 
 def test_one_scratch_helper_owns_temp_dirs_and_exit_hooks():

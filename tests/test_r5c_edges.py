@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from realtime_analytics_with_kafka_clickhouse_spark.operators import (
+    _memo,
     dedup,
     rollups,
     text,
@@ -18,7 +19,8 @@ def _patch(monkeypatch, module, tables):
 
 
 def _clear_bpe_memo():
-    text._BPE_FIT_MEMO.clear()
+    for key in [k for k in _memo._MEMO if k[0] == "bpe_merges"]:
+        del _memo._MEMO[key]
 
 
 def test_bpe_train_learns_planted_pair(spark, monkeypatch):

@@ -168,8 +168,8 @@ def test_one_corpus_read_one_slot_one_fold_kernel():
     assert src.count("pq.read_table(") == 1
     assert "to_pylist(" not in src
     tree = ast.parse(src)
-    # Module-level dict caches: the executor's corpus slot and the driver's
-    # persisted-IVF-index memo, nothing else.
+    # Module-level dict caches: the executor's corpus slot, nothing else
+    # (the driver's IVF index table lives in ``_memo``'s store).
     caches = {
         t.id
         for node in tree.body
@@ -178,7 +178,7 @@ def test_one_corpus_read_one_slot_one_fold_kernel():
         and not node.value.keys
         for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
     }
-    assert caches == {"_CORPUS", "_IVF_INDEX_MEMO"}
+    assert caches == {"_CORPUS"}
     # Every in-place accumulation (a hand-written fold loop) lives in _lfold.
     owners = [
         getattr(node, "name", "<module>")
