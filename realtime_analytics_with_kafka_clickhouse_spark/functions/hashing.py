@@ -31,13 +31,3 @@ def word_hash_expr(col: Column | str, seed: Column | int = 0) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     s = F.lit(seed) if isinstance(seed, int) else seed
     return stable_hash64(F.concat_ws(_SEP, s.cast("string"), c))
-
-
-def duckdb_hash64_sql(expr: str) -> str:
-    """The DuckDB SQL text computing the same value as ``stable_hash64``."""
-    return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
-
-
-def duckdb_word_hash_sql(expr: str, seed_expr: str = "0") -> str:
-    """DuckDB SQL matching ``word_hash_expr`` (seeded)."""
-    return duckdb_hash64_sql(f"concat_ws(chr(1), CAST({seed_expr} AS VARCHAR), {expr})")

@@ -66,8 +66,23 @@ from ..streaming import pipeline as _streaming_pipeline
 # close: 40 changed ops + 10 r6-tail rows through
 # arrow_grouped_label_profile (position 50); hybrid_search_topk is 51st.
 #
+# r17 pass: global_totals, category_revenue_share and hourly_trend now
+# read the stored A1 rollup (``rollups.stored_a1``), and
+# mv_consistency_report scans events itself: those four lead section 1 and
+# push 4 r6-tail rows out.  Position check: 44 changed ops + 6 r6-tail
+# rows through dense_hourly_series (position 50); approx_value_percentiles
+# is 51st.
+#
 _NAMES = [
-    # -- 1. CHANGED this round (r16): every op whose build path the
+    # -- 1. CHANGED this round (r17): the stored-A1 panels and the MV
+    #    audit's raw path --
+    (rollups, [
+        "global_totals",
+        "category_revenue_share",
+        "hourly_trend",
+        "mv_consistency_report",
+    ]),
+    # -- CHANGED in r16: every op whose build path the
     #    memo routing moved (build-once tables, replay sources, file
     #    mirrors, the IVF index table, BPE merges -> _memo; the bucketed
     #    tables and DLQ scans -> the session memo), then the ops that
@@ -161,7 +176,6 @@ _NAMES = [
     ]),
     (rollups, [
         "events_column_profile",
-        "mv_consistency_report",
     ]),
     (text, [
         "vocab_oov_rate",
@@ -359,10 +373,7 @@ _NAMES = [
     (rollups, [
         "hourly_category_rollup",
         "daily_region_rollup",
-        "global_totals",
-        "category_revenue_share",
         "region_revenue_sorted",
-        "hourly_trend",
     ]),
     (relational, [
         "q1_pricing_summary",

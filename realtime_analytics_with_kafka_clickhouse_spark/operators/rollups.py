@@ -17,10 +17,19 @@ days x 7 buckets) so the shuffle carries only partial aggregates — bytes
 shuffled is O(partitions x groups), independent of row count.
 
 The five dashboard panels (``global_totals``, ``category_revenue_share``,
-``region_revenue_sorted``, ``hourly_trend`` and
+``region_revenue_sorted``, ``hourly_trend`` and its registry twin
 ``pipeline.hourly_trend_from_rollup``) are re-run on every dashboard
-refresh, so two rules make a repeat call cheap:
+refresh, so three rules make a repeat call cheap:
 
+* One stored rollup.  A5, A6 and A8 re-aggregate A1 (hour x category),
+  as the reference's dashboard re-sums its SummingMergeTree rollups, so
+  they read the stored, MERGE-maintained A1 table (``stored_a1``), built
+  once per ``events`` state and session time zone: a refresh scans a few
+  hundred rollup rows, never parses ``props`` or casts ``value``.  A7
+  needs A2 (day x region), which is not stored, so it scans ``events``.
+  The stored ``total_revenue`` is a double, re-summed through ``dsum``:
+  exact while every (hour, category) cell's revenue is below 2^33
+  (about 8.59e9) in magnitude (``stored_a1``).
 * Prepared plans.  A panel's first call builds its DataFrame, plans it
   and keeps it in the session's fingerprint-keyed memo
   (``sources.tables.prepared``).  A plan with no exchange (shuffle or
@@ -32,12 +41,13 @@ refresh, so two rules make a repeat call cheap:
   panel) and the analysis.  A rewritten table or a new session time zone
   builds a new plan; nothing else does, so a held plan keeps the optimizer
   and planner confs of its first call.
-* One-task plans.  When Spark plans the panel's input scan (``events``,
-  or the stored rollup) as a single partition, the panel ``coalesce(1)``s
-  it before its aggregates (``single_partition``, asked once per prepared
-  plan): one job, one stage, one task, no Exchange, so the plan is held.
-  A multi-partition input (every table at 100 TB) keeps the
-  partial-aggregate exchange plan above and a fresh execution per call.
+* One-task plans.  When Spark plans the panel's input scan (the stored
+  rollup, or ``events`` for A7) as a single partition, the panel
+  ``coalesce(1)``s it before its aggregates (``single_partition``, asked
+  once per prepared plan): one job, one stage, one task, no Exchange, so
+  the plan is held.  A multi-partition input (every raw table at 100 TB)
+  keeps the partial-aggregate exchange plan above and a fresh execution
+  per call.
 """
 
 from __future__ import annotations
@@ -47,7 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..functions.scalars import dsum, to_start_of_hour
-from ..sources.tables import load_table, prepared
+from ..sources.tables import build_once, load_table, prepared
 
 
 # "valid event" predicate — the F1 analog of WHERE order_status = 'completed'
@@ -73,8 +83,9 @@ def category_key():
 def hourly_category_rollup_aggregate(batch: DataFrame) -> DataFrame:
     """The A1 aggregation over any events batch (hour x category ->
     count/revenue/quantity over completed orders).  The one definition:
-    the registry rollup, the one-task ``hourly_trend`` and the incremental
-    MERGE / txlog builds (``pipeline.hourly_rollup_aggregate``) all use it."""
+    the registry rollup and the incremental MERGE / txlog builds
+    (``pipeline.hourly_rollup_aggregate``, hence the stored A1 the panels
+    read) all use it."""
     return (
         batch.filter(completed())
         .groupBy(
@@ -135,31 +146,53 @@ def _panel_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return single_partition(load_table(spark, sf_dir, "events"))
 
 
+def stored_a1(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The stored A1 rollup (``pipeline._build_txlog_rollup``: the txlog
+    table that 4 out-of-time-order MERGEs maintain), one-partition when
+    Spark plans it so.  Built once per events ``memo_key``
+    (``build_once``): maintenance happens on the write path, and a panel
+    read never rebuilds the MV it reads; a table rewritten at the same
+    path, or a new session time zone, rebuilds it.
+
+    Exactness bound: ``total_revenue`` is stored as a double, so a panel
+    that re-sums it through ``dsum`` equals the raw decimal aggregate only
+    while each (hour, category) cell's sum survives the double ->
+    ``decimal(25,6)`` round trip: |cell sum| < 2^33 (about 8.59e9), where a
+    double's spacing is below 1e-6."""
+    from ..storage import txlog
+    from ..streaming.pipeline import _build_txlog_rollup
+
+    table = build_once(
+        spark, sf_dir, ("events",), "stored_rollup",
+        lambda: _build_txlog_rollup(spark, sf_dir),
+    )
+    return single_partition(txlog.read_table(spark, table))
+
+
 def global_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5: dashboard single-value cards — total orders / total revenue.
-    A prepared panel (module "Scale notes")."""
+    """A5: dashboard single-value cards — total orders / total revenue,
+    summed over the stored A1 (``NULL`` revenue with no completed order,
+    as the raw ``sum``).  A prepared panel (module "Scale notes")."""
 
     def build() -> DataFrame:
-        return _panel_events(spark, sf_dir).filter(completed()).agg(
-            F.count("*").alias("total_orders"),
-            dsum("value").alias("total_revenue"),
+        return stored_a1(spark, sf_dir).agg(
+            F.coalesce(F.sum("order_count"), F.lit(0)).alias("total_orders"),
+            dsum("total_revenue").alias("total_revenue"),
         )
 
     return prepared(spark, sf_dir, "events", "global_totals", build)
 
 
 def category_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A6: revenue share by category (the dashboard donut) — per-category
-    revenue over grand total via an empty-frame window, completed orders
-    only.  A prepared panel (module "Scale notes"); on a one-partition
-    scan the aggregate and the window share the single task."""
+    """A6: revenue share by category (the dashboard donut) — the stored
+    A1's revenue re-summed per category, over the grand total via an
+    empty-frame window.  A prepared panel (module "Scale notes"); on a
+    one-partition rollup scan the aggregate and the window share the
+    single task."""
 
     def build() -> DataFrame:
-        per_cat = (
-            _panel_events(spark, sf_dir)
-            .filter(completed())
-            .groupBy(category_key().alias("category"))
-            .agg(dsum("value").alias("revenue"))
+        per_cat = stored_a1(spark, sf_dir).groupBy("category").agg(
+            dsum("total_revenue").alias("revenue")
         )
         total = F.sum("revenue").over(Window.partitionBy())
         return per_cat.select(
@@ -173,10 +206,11 @@ def category_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def region_revenue_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7: revenue by region, sorted descending (the dashboard bar chart) —
-    the A2 aggregate re-summed across days.  A prepared panel (module
-    "Scale notes"); on a one-partition scan both aggregates and the global
-    sort share the single task.  The registry's ``daily_region_rollup``
-    keeps its own exchange plan."""
+    the A2 aggregate re-summed across days.  A2 is not stored, so this
+    panel scans ``events``.  A prepared panel (module "Scale notes"); on a
+    one-partition scan both aggregates and the global sort share the
+    single task.  The registry's ``daily_region_rollup`` keeps its own
+    exchange plan."""
 
     def build() -> DataFrame:
         a2 = daily_region_rollup_aggregate(_panel_events(spark, sf_dir))
@@ -189,16 +223,16 @@ def region_revenue_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def hourly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8: hourly orders + revenue trend (dual-axis time series) — the A1
-    aggregate re-summed across categories (rollup-as-accelerator; the
-    stored-rollup twin is ``pipeline.hourly_trend_from_rollup``).  A
-    prepared panel (module "Scale notes"); on a one-partition scan both
-    aggregates share the single task.  The registry's
-    ``hourly_category_rollup`` keeps its own exchange plan."""
+    """A8: hourly orders + revenue trend (dual-axis time series) — the
+    stored A1 re-summed across categories (rollup-as-accelerator, SURVEY.md
+    §4); the registry also serves it as
+    ``pipeline.hourly_trend_from_rollup``.  A prepared panel (module
+    "Scale notes"); on a one-partition rollup scan the aggregate runs in
+    the single task.  The registry's ``hourly_category_rollup`` keeps its
+    own raw-scan exchange plan."""
 
     def build() -> DataFrame:
-        a1 = hourly_category_rollup_aggregate(_panel_events(spark, sf_dir))
-        return a1.groupBy("hour").agg(
+        return stored_a1(spark, sf_dir).groupBy("hour").agg(
             F.sum("order_count").alias("order_count"),
             dsum("total_revenue").alias("total_revenue"),
         )
@@ -278,9 +312,9 @@ def mv_consistency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens once per path; at 100 TB the rollup paths are free and the
     raw path is the audit's cost, run at audit cadence, not query
     cadence."""
-    raw = global_totals(spark, sf_dir).select(
-        F.col("total_orders").alias("raw_orders"),
-        F.col("total_revenue").alias("raw_revenue"),
+    raw = load_table(spark, sf_dir, "events").filter(completed()).agg(
+        F.count("*").alias("raw_orders"),
+        dsum("value").alias("raw_revenue"),
     )
     a1 = hourly_category_rollup(spark, sf_dir).agg(
         F.sum("order_count").alias("a1_orders"),

@@ -70,17 +70,6 @@ def latest_version(spark: SparkSession, table: str) -> int:
 _COMMIT_MEMO: dict[tuple[str, int], dict] = {}
 
 
-def invalidate_commit_memo(table: str) -> None:
-    """Explicit invalidation hook (r14 ADVICE #2): a caller that deletes
-    and RECREATES a table path in-process must purge the path's cached
-    manifests or ``read_commit`` would serve the dead table's dir lists.
-    Nothing in the engine reuses table paths today (roots are
-    uuid-per-run, ``vacuum`` purges below), so this enforces the
-    single-writer assumption instead of leaving it implicit."""
-    for k in [k for k in _COMMIT_MEMO if k[0] == table]:
-        del _COMMIT_MEMO[k]
-
-
 def read_commit(spark: SparkSession, table: str, version: int) -> dict | None:
     key = (table, version)
     commit = _COMMIT_MEMO.get(key)

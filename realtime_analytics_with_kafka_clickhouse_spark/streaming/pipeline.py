@@ -34,10 +34,10 @@ from ..functions.scalars import dsum, to_start_of_hour
 # events -> A1 definition lives in operators.rollups.
 from ..operators.rollups import (
     hourly_category_rollup_aggregate as hourly_rollup_aggregate,
-    single_partition,
+    hourly_trend,
 )
 from ..operators._memo import scratch_dir
-from ..sources.tables import build_once, load_table, prepared
+from ..sources.tables import build_once, load_table
 from ..storage import fs
 
 ROLLUP_KEYS = ["hour", "category"]
@@ -275,35 +275,10 @@ def compacted_rollup_txlog(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.unpersist(blocking=False)
 
 
-def hourly_trend_from_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rollup-as-accelerator routing (SURVEY.md §4): the A8 dashboard trend
-    answered from the STORED incremental rollup table — sum across
-    categories of the MERGE-maintained A1 state — never touching raw
-    events at read time.  The oracle is the raw-events A8 aggregation, so
-    the driver proves accelerator == base table every round.
-
-    A prepared panel (``operators.rollups`` "Scale notes"): the stored
-    rollup's txlog is read once per prepared plan, and a one-partition
-    rollup scan is re-summed in a single task.
-
-    The stored rollup itself is built once per events ``memo_key``
-    (``build_once``): maintenance happens on the write path, and a
-    dashboard read never rebuilds the MV it reads; a table rewritten at the
-    same path, or a new session time zone, rebuilds it."""
-    from ..storage import txlog
-
-    def build() -> DataFrame:
-        table = build_once(
-            spark, sf_dir, ("events",), "stored_rollup",
-            lambda: _build_txlog_rollup(spark, sf_dir),
-        )
-        stored = txlog.read_table(spark, table)
-        return single_partition(stored).groupBy("hour").agg(
-            F.sum("order_count").alias("order_count"),
-            dsum("total_revenue").alias("total_revenue"),
-        )
-
-    return prepared(spark, sf_dir, "events", "hourly_trend_from_rollup", build)
+# Rollup-as-accelerator (SURVEY.md §4) under its own registry name: A8 from
+# the stored A1 rollup is one definition, ``rollups.hourly_trend``.  Its
+# oracle is the raw-events A8, so the driver checks accelerator == base table.
+hourly_trend_from_rollup = hourly_trend
 
 
 def process_ingest_batch(
