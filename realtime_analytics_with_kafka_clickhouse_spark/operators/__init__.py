@@ -73,8 +73,33 @@ from ..streaming import pipeline as _streaming_pipeline
 # rows through dense_hourly_series (position 50); approx_value_percentiles
 # is 51st.
 #
+# r18 pass: ZSTD became the engine's parquet and state-store codec, and
+# the wire path sorts each raw epoch by the ORDER BY key.  Section 1 now
+# leads with the ops that read Spark-written files outside Spark's
+# parquet reader (pyarrow footers: explain_estimate_scan and the txlog
+# zone-map reads, txlog_pruned_read, txlog_zorder_pruned_read and the
+# three IVF index ops) and the state-store ops (statestore_inspect,
+# stream_dedup_events).  Five of them were already gate rows; the three
+# IVF ops push 3 r6-tail rows out.  Position check: 47 changed ops + 3
+# r6-tail rows through value_equidepth_histogram (position 50);
+# interpolated_hourly_series is 51st.
+#
 _NAMES = [
-    # -- 1. CHANGED this round (r17): the stored-A1 panels and the MV
+    # -- 1. CHANGED this round (r18): pyarrow footer readers of
+    #    Spark-written parquet, and the state-store ops --
+    (_streaming_pipeline, [
+        "statestore_inspect",
+        "stream_dedup_events",
+        "txlog_pruned_read",
+        "explain_estimate_scan",
+        "txlog_zorder_pruned_read",
+    ]),
+    (similarity, [
+        "ann_ivf_delete_vectors",
+        "stream_ivf_index_ingest",
+        "ann_ivf_incremental",
+    ]),
+    # -- CHANGED in r17: the stored-A1 panels and the MV
     #    audit's raw path --
     (rollups, [
         "global_totals",
@@ -94,18 +119,13 @@ _NAMES = [
         "stream_windowed_rollup_events",
         "stream_sliding_rollup_events",
         "stream_running_totals_events",
-        "statestore_inspect",
         "stream_join_orders_acks",
         "stream_join_orders_acks_outer",
-        "stream_dedup_events",
         "stream_static_enrich",
         "table_parts_report",
         "txlog_time_travel",
         "txlog_changes_feed",
         "txlog_restore_version",
-        "txlog_pruned_read",
-        "explain_estimate_scan",
-        "txlog_zorder_pruned_read",
         "txlog_bloom_pruned_read",
     ]),
     (_storage_layout, [
@@ -442,9 +462,6 @@ _NAMES = [
     ]),
     (similarity, [
         "embedding_top_pc_power_iter",
-        "ann_ivf_delete_vectors",
-        "stream_ivf_index_ingest",
-        "ann_ivf_incremental",
         "embedding_near_dup",
         "ann_lsh_bucketed",
         "hard_negative_mining",

@@ -159,14 +159,33 @@ def stored_a1(spark: SparkSession, sf_dir: str) -> DataFrame:
     while each (hour, category) cell's sum survives the double ->
     ``decimal(25,6)`` round trip: |cell sum| < 2^33 (about 8.59e9), where a
     double's spacing is below 1e-6."""
-    from ..storage import txlog
+    return _read_stored(spark, _stored_a1_table(spark, sf_dir))
+
+
+def _stored_a1_table(spark: SparkSession, sf_dir: str) -> str:
     from ..streaming.pipeline import _build_txlog_rollup
 
-    table = build_once(
+    return build_once(
         spark, sf_dir, ("events",), "stored_rollup",
         lambda: _build_txlog_rollup(spark, sf_dir),
     )
+
+
+def _read_stored(spark: SparkSession, table: str) -> DataFrame:
+    from ..storage import txlog
+
     return single_partition(txlog.read_table(spark, table))
+
+
+def _stored_panel(spark: SparkSession, sf_dir: str, kind: str, build) -> DataFrame:
+    """Prepared panel ``kind``, ``build(stored A1)``.  Its key names the
+    stored table beside the events key: ``build_once`` keeps one stored
+    table per process and builds a new one when callers alternate sf dirs,
+    so a held plan must not outlive the table it reads."""
+    table = _stored_a1_table(spark, sf_dir)
+    return prepared(
+        spark, sf_dir, "events", f"{kind}@{table}", lambda: build(_read_stored(spark, table))
+    )
 
 
 def global_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,13 +193,13 @@ def global_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     summed over the stored A1 (``NULL`` revenue with no completed order,
     as the raw ``sum``).  A prepared panel (module "Scale notes")."""
 
-    def build() -> DataFrame:
-        return stored_a1(spark, sf_dir).agg(
+    def build(stored: DataFrame) -> DataFrame:
+        return stored.agg(
             F.coalesce(F.sum("order_count"), F.lit(0)).alias("total_orders"),
             dsum("total_revenue").alias("total_revenue"),
         )
 
-    return prepared(spark, sf_dir, "events", "global_totals", build)
+    return _stored_panel(spark, sf_dir, "global_totals", build)
 
 
 def category_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,8 +209,8 @@ def category_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-partition rollup scan the aggregate and the window share the
     single task."""
 
-    def build() -> DataFrame:
-        per_cat = stored_a1(spark, sf_dir).groupBy("category").agg(
+    def build(stored: DataFrame) -> DataFrame:
+        per_cat = stored.groupBy("category").agg(
             dsum("total_revenue").alias("revenue")
         )
         total = F.sum("revenue").over(Window.partitionBy())
@@ -201,7 +220,7 @@ def category_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("revenue") / total * 100, 4).alias("revenue_share_pct"),
         )
 
-    return prepared(spark, sf_dir, "events", "category_revenue_share", build)
+    return _stored_panel(spark, sf_dir, "category_revenue_share", build)
 
 
 def region_revenue_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -231,13 +250,13 @@ def hourly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     the single task.  The registry's ``hourly_category_rollup`` keeps its
     own raw-scan exchange plan."""
 
-    def build() -> DataFrame:
-        return stored_a1(spark, sf_dir).groupBy("hour").agg(
+    def build(stored: DataFrame) -> DataFrame:
+        return stored.groupBy("hour").agg(
             F.sum("order_count").alias("order_count"),
             dsum("total_revenue").alias("total_revenue"),
         )
 
-    return prepared(spark, sf_dir, "events", "hourly_trend", build)
+    return _stored_panel(spark, sf_dir, "hourly_trend", build)
 
 
 PROFILE_COLUMNS = ["event_id", "user_id", "event_type", "value", "props"]

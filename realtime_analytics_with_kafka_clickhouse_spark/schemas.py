@@ -48,6 +48,8 @@ ORDER_SCHEMA = T.StructType(
     ]
 )
 
+ORDER_KEY = ("order_timestamp", "order_id")  # the raw table's ORDER BY (01_init.sql:29)
+
 # Driver-provided testdata tables (TESTDATA.md / FIXTURES.md §3).
 TESTDATA_TABLES = (
     "region",

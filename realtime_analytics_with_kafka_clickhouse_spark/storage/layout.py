@@ -5,9 +5,12 @@ ClickHouse DDL -> Spark physical layout:
 - ``PARTITION BY toYYYYMM(order_timestamp)``
   (/root/reference/clickhouse/init/01_init.sql:28) -> parquet
   ``partitionBy(order_month)`` — partition pruning for month predicates.
-- ``ORDER BY (order_timestamp, order_id)`` (:29) ->
-  ``sortWithinPartitions`` before write — parquet row-group min/max stats
-  then give the same data-skipping as ClickHouse's sparse PK index.
+- ``ORDER BY (order_timestamp, order_id)`` (:29) -> ``schemas.ORDER_KEY``, a
+  ``sortWithinPartitions`` before every write of order rows (these writers
+  and the wire path's raw epochs) — parquet row-group min/max stats then
+  give the same data-skipping as ClickHouse's sparse PK index, and the
+  clustered columns compress better under the engine's ZSTD codec
+  (``session.get_spark``).
 - ``TTL order_timestamp + INTERVAL 365 DAY`` (:30) -> ``expire_ttl``:
   whole-month partition drops (cheap, metadata-only at scale) + an exact
   boundary-month rewrite.
@@ -25,6 +28,7 @@ from pyspark.sql import functions as F
 from . import fs
 from ..operators._memo import scratch_dir
 from ..operators.normalize import with_partition_month
+from ..schemas import ORDER_KEY
 
 
 def write_orders_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -32,7 +36,7 @@ def write_orders_table(df: DataFrame, path: str, mode: str = "overwrite") -> Non
     (
         with_partition_month(df)
         .repartition("order_month")
-        .sortWithinPartitions("order_timestamp", "order_id")
+        .sortWithinPartitions(*ORDER_KEY)
         .write.mode(mode)
         .partitionBy("order_month")
         .parquet(path)
@@ -130,11 +134,7 @@ def delete_rows(spark: SparkSession, path: str, predicate: str) -> list[str]:
             touched.append(f"dropped:order_month={month}")
             continue
         tmp = fs.swap_tmp_path(part_dir)
-        (
-            surviving.sortWithinPartitions("order_timestamp", "order_id")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
+        surviving.sortWithinPartitions(*ORDER_KEY).write.mode("overwrite").parquet(tmp)
         fs.swap_in(spark, part_dir, tmp)
         touched.append(f"rewrote:order_month={month}")
     return touched
@@ -146,7 +146,7 @@ def update_rows(
     predicate: str,
     assignments: dict[str, str],
     partition_col: str = "order_month",
-    sort_cols: tuple[str, ...] = ("order_timestamp", "order_id"),
+    sort_cols: tuple[str, ...] = ORDER_KEY,
 ) -> list[str]:
     """Targeted in-place update — the ``ALTER TABLE ... UPDATE col = expr
     WHERE pred`` mutation of ClickHouse MergeTree tables (the sibling of
@@ -281,7 +281,7 @@ def expire_ttl(spark: SparkSession, path: str, cutoff_ts: str) -> list[str]:
             surviving = (
                 spark.read.parquet(part_dir)
                 .filter(F.col("order_timestamp") >= F.lit(cutoff_ts).cast("timestamp"))
-                .sortWithinPartitions("order_timestamp", "order_id")
+                .sortWithinPartitions(*ORDER_KEY)
             )
             tmp = fs.swap_tmp_path(part_dir)
             surviving.write.mode("overwrite").parquet(tmp)

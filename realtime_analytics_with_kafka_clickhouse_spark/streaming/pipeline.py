@@ -37,6 +37,7 @@ from ..operators.rollups import (
     hourly_trend,
 )
 from ..operators._memo import scratch_dir
+from ..schemas import ORDER_KEY
 from ..sources.tables import build_once, load_table
 from ..storage import fs
 
@@ -299,6 +300,11 @@ def process_ingest_batch(
         once, by the raw write, with no columnar cache of all its columns;
     (c) the rollup MERGE carries the batch id and is skipped if that id is
         already recorded in the rollup's marker (see ``merge_rollup``).
+
+    The epoch is written in ``batch_df``'s row order: a caller that wants
+    the raw table's clustering sorts the batch first, as
+    ``run_wire_stream_pipeline`` does; the events-schema file pipeline
+    keeps its arrival order.
     """
     epoch_dir = f"{raw_dir}/ingest_epoch={batch_id}"
     batch_df.write.mode("overwrite").parquet(epoch_dir)
@@ -375,7 +381,12 @@ def run_wire_stream_pipeline(
 
     Each main-query batch is handled by ``process_ingest_batch``: the raw
     epoch write is the one pass over the parsed batch, and the rollup
-    partials are aggregated from that epoch directory read back.
+    partials are aggregated from that epoch directory read back.  The
+    batch is first sorted within its partitions by ``schemas.ORDER_KEY``,
+    the raw table's ``ORDER BY (order_timestamp, order_id)``: each epoch
+    file is clustered like a MergeTree part, so its row-group min/max
+    stats skip data on time ranges, and the sorted columns compress to
+    fewer ZSTD bytes (the session's codec, ``session.get_spark``).
     """
     from ..operators.normalize import normalize_orders, parse_wire_with_dlq
 
@@ -384,8 +395,9 @@ def run_wire_stream_pipeline(
     deduped = dedup_orders_stream(normalize_orders(ok))
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
+        clustered = batch_df.sortWithinPartitions(*ORDER_KEY)
         process_ingest_batch(
-            spark, batch_df, batch_id, raw_dir, rollup_dir, orders_hourly_rollup_aggregate
+            spark, clustered, batch_id, raw_dir, rollup_dir, orders_hourly_rollup_aggregate
         )
 
     main_q = (

@@ -16,6 +16,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from realtime_analytics_with_kafka_clickhouse_spark.functions.scalars import (
@@ -68,20 +69,35 @@ def _run_in_group(spark, df) -> tuple[list, list[int]]:
 def _stage_stats(spark, job_ids: list[int]) -> dict:
     """Status-store totals over ``job_ids``: stages run, their tasks and
     input rows, and stages the scheduler skipped (their map output already
-    existed)."""
+    existed).  The counts are each job's own record.  Input rows come from
+    the records of the job's run stages, all of which must be found: past
+    ``spark.ui.retainedStages`` the store evicts skipped stages' records
+    first, so only a skipped stage's record may be gone."""
     store = spark.sparkContext._jsc.sc().statusStore()
     out = {"stages": 0, "tasks": 0, "input_records": 0, "skipped_stages": 0}
     for jid in job_ids:
-        ids = store.job(jid).stageIds()
-        for i in range(ids.size()):
-            st = store.lastStageAttempt(ids.apply(i))
-            if st.status().toString() == "SKIPPED":
-                out["skipped_stages"] += 1
-                continue
-            out["stages"] += 1
-            out["tasks"] += st.numCompleteTasks()
-            out["input_records"] += st.inputRecords()
+        job = store.job(jid)
+        out["stages"] += job.numCompletedStages()
+        out["tasks"] += job.numCompletedTasks()
+        out["skipped_stages"] += job.numSkippedStages()
+        ids = job.stageIds()
+        run = [
+            st for st in (_stage_record(store, ids.apply(i)) for i in range(ids.size()))
+            if st is not None and st.status().toString() == "COMPLETE"
+        ]
+        assert len(run) == job.numCompletedStages(), (jid, len(run))
+        out["input_records"] += sum(st.inputRecords() for st in run)
     return out
+
+
+def _stage_record(store, stage_id: int):
+    """The last attempt's record of ``stage_id``, or None if evicted."""
+    try:
+        return store.lastStageAttempt(stage_id)
+    except Py4JJavaError as e:
+        if "NoSuchElementException" not in str(e.java_exception):
+            raise
+        return None
 
 
 def _multi_file_events(tmp_path, n_files: int = 4) -> str:
