@@ -84,12 +84,32 @@ from ..streaming import pipeline as _streaming_pipeline
 # r6-tail rows through value_equidepth_histogram (position 50);
 # interpolated_hourly_series is 51st.
 #
+# r19 pass: the ten streaming proofs now run through one replay harness
+# (``pipeline._replay_stream``) in a child session, from one replay-source
+# builder.  They lead section 1; all ten were already gate rows (two in
+# r18's section, eight in r16's), so the gate's membership is unchanged.
+# Position check: 47 changed ops + 3 r6-tail rows through
+# value_equidepth_histogram (position 50); interpolated_hourly_series is
+# 51st.
+#
 _NAMES = [
-    # -- 1. CHANGED this round (r18): pyarrow footer readers of
-    #    Spark-written parquet, and the state-store ops --
+    # -- 1. CHANGED this round (r19): the streaming proofs that run
+    #    through the one replay harness --
     (_streaming_pipeline, [
         "statestore_inspect",
         "stream_dedup_events",
+        "stream_ohlc_bars",
+        "stream_sessionize_events",
+        "stream_windowed_rollup_events",
+        "stream_sliding_rollup_events",
+        "stream_running_totals_events",
+        "stream_join_orders_acks",
+        "stream_join_orders_acks_outer",
+        "stream_static_enrich",
+    ]),
+    # -- CHANGED in r18: pyarrow footer readers of Spark-written
+    #    parquet (the state-store ops moved up in r19) --
+    (_streaming_pipeline, [
         "txlog_pruned_read",
         "explain_estimate_scan",
         "txlog_zorder_pruned_read",
@@ -114,14 +134,6 @@ _NAMES = [
     #    now share the one epoch split / A1 re-sum helpers --
     (_streaming_pipeline, [
         "hourly_trend_from_rollup",
-        "stream_ohlc_bars",
-        "stream_sessionize_events",
-        "stream_windowed_rollup_events",
-        "stream_sliding_rollup_events",
-        "stream_running_totals_events",
-        "stream_join_orders_acks",
-        "stream_join_orders_acks_outer",
-        "stream_static_enrich",
         "table_parts_report",
         "txlog_time_travel",
         "txlog_changes_feed",

@@ -164,10 +164,149 @@ def _fresh_rollup_dir(name: str) -> str:
     return d
 
 
-def _stream_run(prefix: str) -> tuple[str, str]:
-    """(checkpoint dir, query name) of one fresh streaming proof run."""
-    d = scratch_dir("inc_rollups", prefix)
-    return os.path.join(d, "ckpt"), os.path.basename(d).replace("-", "_")
+#: Shuffle-partition count of the bounded replays: the streaming proofs'
+#: state partitions (fixed when a stateful query starts) and the small
+#: driver-coordinated jobs of ``run_arrival_lifecycle``.  Each state
+#: partition costs a store open + commit per micro-batch (a stream-stream
+#: join keeps four stores per partition; the pandas ops add an Arrow
+#: round-trip), and 32 partitions doubled a replay's stream time
+#: (measured); a deployment sizes this when it provisions the job.
+REPLAY_PARTITIONS = 8
+
+
+def _replay_src(
+    spark: SparkSession, sf_dir: str, kind: str, table: str, cols: list, split
+) -> list[tuple[str, T.StructType]]:
+    """The replay files of one streaming proof: ``table``'s ``cols``,
+    persisted while ``split`` cuts them into each side's chunk frames, in
+    replay order.  Every chunk is one parquet file of its side's dir, so
+    ascending mtimes give the replay order and ``_replay_stream`` reads one
+    file per micro-batch.  Returns each side's (dir, schema).
+
+    The files are deterministic per ``table``'s ``memo_key``, so they are
+    written once into build-once slot ``kind`` (one slot per kind, so each
+    proof's source keeps its own); the schema is memoized with its path,
+    so a call reads no parquet footer.  The stream itself runs fresh every
+    call, so the measured cost stays the real streaming cost."""
+
+    def write_src() -> list[tuple[str, T.StructType]]:
+        frame = load_table(spark, sf_dir, table).select(*cols).persist()
+        root = scratch_dir("inc_rollups", kind)
+        sides = []
+        try:
+            for i, chunks in enumerate(split(frame)):
+                path = os.path.join(root, f"side{i}")
+                for chunk in chunks:
+                    chunk.coalesce(1).write.mode("append").parquet(path)
+                sides.append((path, spark.read.parquet(path).schema))
+        finally:
+            frame.unpersist(blocking=False)
+        return sides
+
+    return build_once(spark, sf_dir, (table,), kind, write_src)
+
+
+def _time_halves(frame: DataFrame) -> list[list[DataFrame]]:
+    """One side of 2 chunks split at the ``ts`` midpoint: fixed bounds from
+    one min/max aggregate (map-only filters, no global sort), written in
+    ascending time so the watermark only moves forward."""
+    import datetime as _dt
+
+    lo, hi = frame.agg(F.min("ts"), F.max("ts")).first()
+    mid = lo + ((hi - lo) or _dt.timedelta(seconds=1)) / 2
+    return [
+        [frame.filter(F.col("ts") < F.lit(mid)), frame.filter(F.col("ts") >= F.lit(mid))]
+    ]
+
+
+def _id_halves(key: str):
+    """A split into one side of 2 chunks by ``key`` mod 2: membership an
+    oracle can reproduce (unlike a timestamp midpoint)."""
+    return lambda frame: [
+        [frame.filter(F.pmod(F.col(key), F.lit(2)) == i) for i in (0, 1)]
+    ]
+
+
+def _replay_stream(
+    spark: SparkSession,
+    sources: list[tuple[str, T.StructType]],
+    transform,
+    *,
+    output_mode: str = "append",
+    provider: str | None = None,
+    read_state: bool = False,
+) -> DataFrame:
+    """Run one streaming proof: read each ``(dir, schema)`` of ``sources``
+    as a stream of one file per micro-batch, pass the streams to
+    ``transform``, drain the result through an availableNow memory sink,
+    and return the sink's rows (``read_state``: the checkpoint's state
+    through the ``statestore`` source instead) as a DataFrame of a child
+    session of ``spark``.
+
+    Why a child session (``spark.newSession()``):
+
+    - *The state layout is fixed when the query starts.*  The state
+      partition count (``spark.sql.shuffle.partitions``, here
+      ``REPLAY_PARTITIONS``) and the state store ``provider`` are read at
+      start and recorded in the checkpoint's offset log; later batches
+      take them from there.  So they are set on the child only, and the
+      caller's conf is never written: no other thread of the caller's
+      session plans under them.
+      The child first copies every runtime-modifiable conf of the caller
+      (time zone, parquet and codec settings), which a bare
+      ``newSession()`` would lose, and the returned DataFrame runs under
+      the caller's shuffle-partition count again.
+    - *The memory sink's view lives in the child's catalog* and is
+      dropped once the returned DataFrame is analysed; the analysed plan
+      still holds the sink's rows, so the caller's session gains no view
+      and a long-lived session does not grow with every call.
+    - *One plan, one session.*  ``transform`` must build every frame a
+      stream joins from the streams' own session (``s.sparkSession``),
+      never from ``spark``.
+
+    A ``StreamingQueryListener`` on the caller's session does not see
+    these queries: each session has its own streaming query manager.
+    Observability for the proofs must listen on the child.
+    ``run_wire_stream_pipeline`` stays on the caller's session for that
+    reason."""
+    shuffle_key = "spark.sql.shuffle.partitions"
+    child = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            child.conf.set(key, value)
+    child.conf.set(shuffle_key, str(REPLAY_PARTITIONS))
+    if provider is not None:
+        child.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
+    run = scratch_dir("inc_rollups", "replay")
+    ckpt, view = os.path.join(run, "ckpt"), os.path.basename(run).replace("-", "_")
+    streams = [
+        child.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
+        for path, schema in sources
+    ]
+    query = (
+        transform(*streams)
+        .writeStream.format("memory")
+        .queryName(view)
+        .outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        query.awaitTermination()
+    finally:
+        # The streaming query manager of the child, and of the clone of it
+        # that a stateful query runs in, each register a listener bus on
+        # the SparkContext that Spark never removes: one leaked bus per
+        # session and call.
+        context_bus = spark.sparkContext._jsc.sc().listenerBus()
+        stream_session = query._jsq.streamingQuery().sparkSessionForStream()
+        for session in (child._jsparkSession, stream_session):
+            context_bus.removeListener(session.streams().listenerBus())
+    child.conf.set(shuffle_key, spark.conf.get(shuffle_key))
+    out = child.read.format("statestore").load(ckpt) if read_state else child.table(view)
+    child.catalog.dropTempView(view)
+    return out
 
 
 def incremental_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -696,15 +835,14 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal turnover) is exact, no tolerance anywhere.  The proof this
     adds over the rollup MV: ORDER-SENSITIVE aggregates (first/last by
     time) survive cross-batch state merges bit-exactly."""
-    name = _replay_events_stream(spark, sf_dir, windowed_ohlc, "ohlc")
-    return spark.sql(
-        f"SELECT day, open, high, low, close, volume, turnover FROM {name}"
+    return _replay_events(spark, sf_dir, windowed_ohlc).select(
+        "day", "open", "high", "low", "close", "volume", "turnover"
     )
 
 
 def stream_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-gated end-to-end run of the stateful streaming sessionizer
-    (SURVEY.md §2.7 ST4): replay ``events`` as 4 TIME-ORDERED micro-batch
+    (SURVEY.md §2.7 ST4): replay ``events`` as 2 TIME-ORDERED micro-batch
     files through ``streaming_sessionize`` (applyInPandasWithState,
     event-time timeouts) and return every session the stream EMITTED.
 
@@ -724,85 +862,30 @@ def stream_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs); session_revenue rounds to 6 because the stream folds floats
     in arrival order while the oracle sums decimals — same accepted
     round-6 equivalence as the ANN cosine family."""
-    name = _replay_events_stream(spark, sf_dir, streaming_sessionize, "sessionize")
-    return spark.sql(
-        f"SELECT user_id, session_start, session_end, n_events,"
-        f" round(session_revenue, 6) AS session_revenue FROM {name}"
+    return _replay_events(spark, sf_dir, streaming_sessionize).select(
+        "user_id",
+        "session_start",
+        "session_end",
+        "n_events",
+        F.round("session_revenue", 6).alias("session_revenue"),
     )
 
 
-def _replay_events_stream(spark: SparkSession, sf_dir: str, op, prefix: str) -> str:
-    """Shared replay harness for driver-gated streaming queries: write
-    ``events`` as 2 TIME-ORDERED chunk files, run ``op`` (stream ->
-    stream transform) through an availableNow memory sink, return the
-    sink's view name.
-
-    Two time-split chunks: every micro-batch is a full stateful pass
-    (state-store open + Arrow round-trip per partition), so the replay
-    uses the minimum batch count that still exercises cross-batch state
-    handoff — 2 data batches + the final watermark-advance batch.
-    Sequential writes -> ascending file mtimes = replay order.
-
-    The chunk FILES are deterministic per events ``memo_key``, so they
-    write once (``build_once``); the stream itself — checkpoint, state,
-    sink — runs fresh every call, so the measured cost stays the real
-    streaming cost."""
-    import datetime as _dt
-
-    def write_src() -> dict:
-        events = load_table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id", "value", "props", "event_type"
-        ).persist()  # each chunk write filters this one cached scan
-        lo, hi = events.agg(F.min("ts"), F.max("ts")).collect()[0]
-        mid = lo + ((hi - lo) or _dt.timedelta(seconds=1)) / 2
-        src = os.path.join(scratch_dir("inc_rollups", "replay-src"), "events")
-        try:
-            for chunk in (
-                events.filter(F.col("ts") < F.lit(mid)),
-                events.filter(F.col("ts") >= F.lit(mid)),
-            ):
-                chunk.coalesce(1).write.mode("append").parquet(src)
-        finally:
-            events.unpersist(blocking=False)
-        # Memoize schema + row count WITH the path (r14 optimization):
-        # they are properties of the just-written immutable chunk files,
-        # and re-deriving them per call costs a schema inference plus a
-        # count job for every streaming proof in the session.
-        return {
-            "src": src,
-            "schema": spark.read.parquet(src).schema,
-            "n_events": spark.read.parquet(src).count(),
-        }
-
-    ckpt, name = _stream_run(prefix)
-    memo = build_once(spark, sf_dir, ("events",), "replay_src", write_src)
-    stream = spark.readStream.schema(memo["schema"]).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(memo["src"])
-    # State-partition count is fixed at stream START (it shapes the state
-    # store layout for the query's lifetime), so size it to the replay
-    # volume: each partition costs a state-store open + Arrow round-trip
-    # PER MICRO-BATCH, and 32 partitions for a bounded replay pays ~2x the
-    # stream time in fixed overhead (measured).  A production deployment
-    # makes exactly this sizing call when provisioning the job.
-    n_events = memo["n_events"]
-    parts = str(max(8, n_events // 50_000))
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    try:
-        q = (
-            op(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    q.awaitTermination()
-    return name
+def _replay_events(spark: SparkSession, sf_dir: str, op) -> DataFrame:
+    """``op`` over ``events`` replayed as 2 time-ordered chunk files.  Every
+    micro-batch is a full stateful pass (state-store open + Arrow
+    round-trip per partition), so the replay uses the fewest batches that
+    still hand state across batches: 2 data batches + the final
+    watermark-advance batch."""
+    src = _replay_src(
+        spark,
+        sf_dir,
+        "replay_src",
+        "events",
+        ["event_id", "ts", "user_id", "value", "props", "event_type"],
+        _time_halves,
+    )
+    return _replay_stream(spark, src, op)
 
 
 def stream_windowed_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -815,10 +898,8 @@ def stream_windowed_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame
     rollup restricted to hours with hour + 1h <= max_ts - 2h (the final
     watermark).  Everything is count/decimal arithmetic — no float
     tolerance at all."""
-    name = _replay_events_stream(spark, sf_dir, windowed_stateful_rollup, "winroll")
-    return spark.sql(
-        f"SELECT hour, category, order_count, total_revenue, total_quantity"
-        f" FROM {name}"
+    return _replay_events(spark, sf_dir, windowed_stateful_rollup).select(
+        "hour", "category", "order_count", "total_revenue", "total_quantity"
     )
 
 
@@ -973,6 +1054,34 @@ def txlog_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.unpersist(blocking=False)
 
 
+#: The TPC-H ``orders`` columns that ``_orders_acks`` derives from.
+_ORDERS_COLS = ["o_orderkey", "o_orderdate", "o_totalprice"]
+
+
+def _orders_acks(orders: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The order and ack frames of the stream-stream join proofs, from
+    TPC-H ``orders``: (order_id, order_timestamp, total_amount) and one ack
+    per order.  The md5-selected half (``stable_hash64`` of the id, which
+    the DuckDB oracle reproduces) acks at +10 min, inside the 1-hour join
+    window; the other half acks at +3 h, outside it."""
+    from ..functions.hashing import stable_hash64
+
+    orders = orders.select(
+        F.col("o_orderkey").alias("order_id"),
+        F.col("o_orderdate").cast("timestamp").alias("order_timestamp"),
+        F.col("o_totalprice").alias("total_amount"),
+    )
+    in_window = F.pmod(stable_hash64(F.col("order_id").cast("string")), F.lit(2)) == 0
+    acks = orders.select(
+        "order_id",
+        F.when(in_window, F.col("order_timestamp") + F.expr("INTERVAL 10 MINUTES"))
+        .otherwise(F.col("order_timestamp") + F.expr("INTERVAL 3 HOURS"))
+        .alias("ack_timestamp"),
+        F.lit("ok").alias("ack_status"),
+    )
+    return orders, acks
+
+
 def stream_join_orders_acks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-gated stream-stream join (SURVEY.md §2.7): ``orders``
     replayed against a DERIVED acknowledgement stream through
@@ -987,57 +1096,16 @@ def stream_join_orders_acks(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is what makes this oracle-checkable.  Stream mechanics under
     test: per-side watermarks, the range condition that lets Spark purge
     join state at watermark - window, and append-mode match emission."""
-    from ..functions.hashing import stable_hash64
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("order_id"),
-        F.col("o_orderdate").cast("timestamp").alias("order_timestamp"),
-        F.col("o_totalprice").alias("total_amount"),
+    src = _replay_src(
+        spark,
+        sf_dir,
+        "ssjoin_src",
+        "orders",
+        _ORDERS_COLS,
+        lambda frame: [[side] for side in _orders_acks(frame)],
     )
-    in_window = F.pmod(stable_hash64(F.col("order_id").cast("string")), F.lit(2)) == 0
-    acks = orders.select(
-        "order_id",
-        F.when(in_window, F.col("order_timestamp") + F.expr("INTERVAL 10 MINUTES"))
-        .otherwise(F.col("order_timestamp") + F.expr("INTERVAL 3 HOURS"))
-        .alias("ack_timestamp"),
-        F.lit("ok").alias("ack_status"),
-    )
-    ckpt, name = _stream_run("ssjoin")
-
-    # Deterministic source files write once per orders ``memo_key``; the
-    # stream (checkpoint, join state, sink) runs fresh every call.
-    def write_src() -> tuple[str, str]:
-        src = scratch_dir("inc_rollups", "ssjoin-src")
-        o_src, a_src = os.path.join(src, "orders"), os.path.join(src, "acks")
-        orders.coalesce(1).write.parquet(o_src)
-        acks.coalesce(1).write.parquet(a_src)
-        return o_src, a_src
-
-    o_src, a_src = build_once(spark, sf_dir, ("orders",), "ssjoin_src", write_src)
-    o_stream = spark.readStream.schema(orders.schema).parquet(o_src)
-    a_stream = spark.readStream.schema(acks.schema).parquet(a_src)
-    # Stream-stream join keeps FOUR state stores per partition (2 sides x
-    # keyToNumValues/keyWithIndexToValue); at 32 shuffle partitions that is
-    # 128 store opens+commits per micro-batch for a bounded replay — size
-    # the state layout to the replay volume like _replay_events_stream does.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            join_orders_with_acks(o_stream, a_stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    q.awaitTermination()
-    return spark.sql(
-        f"SELECT order_id, order_timestamp, ack_timestamp, ack_status,"
-        f" total_amount FROM {name}"
+    return _replay_stream(spark, src, join_orders_with_acks).select(
+        "order_id", "order_timestamp", "ack_timestamp", "ack_status", "total_amount"
     )
 
 
@@ -1248,52 +1316,23 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     State shape: one key per event_id inside the watermark horizon —
     bounded by rate x watermark, the only state a 100 TB stream can
     afford (a global dropDuplicates would hold every id ever seen)."""
-    import datetime as _dt
-
-    def write_src() -> tuple[str, T.StructType]:
-        events = load_table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id", "value"
-        ).persist()
-        dupes = events.filter(F.pmod(F.col("event_id"), F.lit(50)) == 0)
-        with_dupes = events.unionByName(dupes)
-        lo, hi = events.agg(F.min("ts"), F.max("ts")).collect()[0]
-        mid = lo + ((hi - lo) or _dt.timedelta(seconds=1)) / 2
-        src = os.path.join(scratch_dir("inc_rollups", "sdedup-src"), "events")
-        try:
-            for chunk in (
-                with_dupes.filter(F.col("ts") < F.lit(mid)),
-                with_dupes.filter(F.col("ts") >= F.lit(mid)),
-            ):
-                chunk.coalesce(1).write.mode("append").parquet(src)
-        finally:
-            events.unpersist(blocking=False)
-        # schema memoized with the path: immutable chunk files, and the
-        # per-call re-inference is a driver footer pass (r14 optimization)
-        return src, spark.read.parquet(src).schema
-
-    ckpt, name = _stream_run("sdedup")
-    src, schema = build_once(spark, sf_dir, ("events",), "sdedup_src", write_src)
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    deduped = stream.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
-        ["event_id"]
+    src = _replay_src(
+        spark,
+        sf_dir,
+        "sdedup_src",
+        "events",
+        ["event_id", "ts", "user_id", "value"],
+        lambda ev: _time_halves(
+            ev.unionByName(ev.filter(F.pmod(F.col("event_id"), F.lit(50)) == 0))
+        ),
     )
-    # Same state-partition sizing call as _replay_events_stream: each
-    # partition is a store open+commit per micro-batch of the bounded replay.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    q.awaitTermination()
-    return spark.sql(f"SELECT event_id, ts, user_id, value FROM {name}")
+    return _replay_stream(
+        spark,
+        src,
+        lambda s: s.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
+            ["event_id"]
+        ),
+    ).select("event_id", "ts", "user_id", "value")
 
 
 def running_totals_tws(events: DataFrame) -> DataFrame:
@@ -1398,26 +1437,17 @@ def running_totals_tws(events: DataFrame) -> DataFrame:
     )
 
 
-def _events_2chunk_src(spark: SparkSession, sf_dir: str) -> str:
-    """events written once per events ``memo_key`` as 2 deterministic chunk
-    files (event_id mod 2) — the replay source for cross-batch state
-    proofs (membership the oracle can reproduce, unlike a timestamp
-    midpoint)."""
-    def write_src() -> str:
-        events = load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "value"
-        ).persist()
-        src = os.path.join(scratch_dir("inc_rollups", "tws-src"), "events")
-        try:
-            for i in (0, 1):
-                events.filter(F.pmod(F.col("event_id"), F.lit(2)) == i).coalesce(
-                    1
-                ).write.mode("append").parquet(src)
-        finally:
-            events.unpersist(blocking=False)
-        return src
-
-    return build_once(spark, sf_dir, ("events",), "tws_src", write_src)
+def _events_id_src(spark: SparkSession, sf_dir: str) -> list[tuple[str, T.StructType]]:
+    """``events`` as 2 chunk files by event_id mod 2: the replay source of
+    the cross-batch state proofs."""
+    return _replay_src(
+        spark,
+        sf_dir,
+        "tws_src",
+        "events",
+        ["event_id", "user_id", "value"],
+        _id_halves("event_id"),
+    )
 
 
 def statestore_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1435,31 +1465,16 @@ def statestore_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum) so cross-batch accumulation order cannot smear the hash.  At
     scale the state read is partition-parallel (one task per state store
     partition), no driver materialization."""
-    ckpt, name = _stream_run("ssi")
-    src = _events_2chunk_src(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(src)
-    agg = stream.groupBy("user_id").agg(
-        F.count("*").alias("n_events"),
-        F.sum("event_id").alias("id_sum"),
+    state = _replay_stream(
+        spark,
+        _events_id_src(spark, sf_dir),
+        lambda s: s.groupBy("user_id").agg(
+            F.count("*").alias("n_events"),
+            F.sum("event_id").alias("id_sum"),
+        ),
+        output_mode="update",
+        read_state=True,
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    state = spark.read.format("statestore").load(ckpt)
     # State value fields carry the PHYSICAL aggregate names (count/sum),
     # not the query aliases — part of what this surface exposes.
     return state.select(
@@ -1479,42 +1494,14 @@ def stream_running_totals_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is pure SQL: chunk-0 users contribute their chunk-0
     aggregate; chunk-1 users contribute chunk-0 + chunk-1 — cross-batch
     state handoff is what the equality proves.  transformWithState
-    requires the RocksDB state store; the conf is set for this stream's
-    start and restored after (provider choice binds at query start)."""
-    ckpt, name = _stream_run("tws")
-    src = _events_2chunk_src(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(src)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            running_totals_tws(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if old_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old_provider)
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.sql(
-        f"SELECT user_id, n_events_so_far, revenue_cents_so_far FROM {name}"
-    )
+    requires the RocksDB state store, set for this stream only (the
+    provider binds at query start)."""
+    return _replay_stream(
+        spark,
+        _events_id_src(spark, sf_dir),
+        running_totals_tws,
+        provider="org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    ).select("user_id", "n_events_so_far", "revenue_cents_so_far")
 
 
 # Hash-bucket directory count for FACT-KEYED merge tables (Replacing /
@@ -2227,48 +2214,33 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     its batch alone, which is why the emitted set equals the batch join
     exactly.  The dimension is broadcast; the stream side never
     shuffles."""
-    ckpt, name = _stream_run("senrich")
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("order_id"),
-        "o_custkey",
-        F.col("o_totalprice").alias("total_amount"),
+    src = _replay_src(
+        spark,
+        sf_dir,
+        "senrich_src",
+        "orders",
+        [
+            F.col("o_orderkey").alias("order_id"),
+            "o_custkey",
+            F.col("o_totalprice").alias("total_amount"),
+        ],
+        _id_halves("order_id"),
     )
 
-    def write_src() -> str:
-        src = os.path.join(scratch_dir("inc_rollups", "senrich-src"), "orders")
-        for i in (0, 1):
-            orders.filter(F.pmod(F.col("order_id"), F.lit(2)) == i).coalesce(
-                1
-            ).write.mode("append").parquet(src)
-        return src
+    def enrich(stream: DataFrame) -> DataFrame:
+        cust = load_table(stream.sparkSession, sf_dir, "customer").select(
+            "c_custkey", "c_mktsegment", "c_nationkey"
+        )
+        return stream.join(
+            F.broadcast(cust), stream.o_custkey == cust.c_custkey
+        ).select(
+            "order_id",
+            F.col("c_mktsegment").alias("segment"),
+            F.col("c_nationkey").cast("long").alias("nation_key"),
+            "total_amount",
+        )
 
-    src = build_once(spark, sf_dir, ("orders",), "senrich_src", write_src)
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", "c_nationkey"
-    )
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).option("maxFilesPerTrigger", 1).parquet(src)
-    enriched = stream.join(
-        F.broadcast(cust), stream.o_custkey == cust.c_custkey
-    ).select(
-        "order_id",
-        F.col("c_mktsegment").alias("segment"),
-        F.col("c_nationkey").cast("long").alias("nation_key"),
-        "total_amount",
-    )
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"SELECT order_id, segment, nation_key, total_amount FROM {name}"
-    )
+    return _replay_stream(spark, src, enrich)
 
 
 def aggregating_merge_sketch_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2388,66 +2360,26 @@ def stream_join_orders_acks_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     Mechanics under test: padded-row emission on state eviction, the
     no-data batch that fires eviction after the last file, and per-side
     watermarks."""
-    from ..functions.hashing import stable_hash64
 
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("order_id"),
-        F.col("o_orderdate").cast("timestamp").alias("order_timestamp"),
-        F.col("o_totalprice").alias("total_amount"),
-    )
-    in_window = F.pmod(stable_hash64(F.col("order_id").cast("string")), F.lit(2)) == 0
-    acks = orders.select(
-        "order_id",
-        F.when(in_window, F.col("order_timestamp") + F.expr("INTERVAL 10 MINUTES"))
-        .otherwise(F.col("order_timestamp") + F.expr("INTERVAL 3 HOURS"))
-        .alias("ack_timestamp"),
-        F.lit("ok").alias("ack_status"),
-    )
-    ckpt, name = _stream_run("ssjoino")
-
-    def write_src() -> tuple[str, str]:
+    def with_sentinels(frame: DataFrame) -> list[list[DataFrame]]:
+        orders, acks = _orders_acks(frame)
         far = orders.agg(
-            (F.max("order_timestamp") + F.expr("INTERVAL 30 DAYS")).alias("t")
-        ).collect()[0]["t"]
-        src = scratch_dir("inc_rollups", "ssjoino-src")
-        o_src, a_src = os.path.join(src, "orders"), os.path.join(src, "acks")
-        orders.coalesce(1).write.parquet(o_src)
-        acks.coalesce(1).write.parquet(a_src)
-        sentinel_o = spark.createDataFrame(
-            [(-1, far, 0.0)], schema=orders.schema
-        )
-        sentinel_a = spark.createDataFrame(
-            [(-1, far, "sentinel")], schema=acks.schema
-        )
-        sentinel_o.coalesce(1).write.mode("append").parquet(o_src)
-        sentinel_a.coalesce(1).write.mode("append").parquet(a_src)
-        return o_src, a_src
+            F.max("order_timestamp") + F.expr("INTERVAL 30 DAYS")
+        ).first()[0]
+        return [
+            [orders, spark.createDataFrame([(-1, far, 0.0)], schema=orders.schema)],
+            [acks, spark.createDataFrame([(-1, far, "sentinel")], schema=acks.schema)],
+        ]
 
-    o_src, a_src = build_once(spark, sf_dir, ("orders",), "ssjoino_src", write_src)
-    o_stream = spark.readStream.schema(orders.schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(o_src)
-    a_stream = spark.readStream.schema(acks.schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(a_src)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            join_orders_with_acks_outer(o_stream, a_stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    src = _replay_src(
+        spark, sf_dir, "ssjoino_src", "orders", _ORDERS_COLS, with_sentinels
+    )
+    return (
+        _replay_stream(spark, src, join_orders_with_acks_outer)
+        .select(
+            "order_id", "order_timestamp", "ack_timestamp", "ack_status", "total_amount"
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    q.awaitTermination()
-    return spark.sql(
-        f"SELECT order_id, order_timestamp, ack_timestamp, ack_status,"
-        f" total_amount FROM {name} WHERE order_id >= 0"
+        .filter(F.col("order_id") >= 0)
     )
 
 
@@ -2878,12 +2810,8 @@ def stream_sliding_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     - 1h, trunc(ts,'hour')}, and a window survives iff win_start + 2h
     <= max_ts - 2h — the oracle recomputes exactly that with a 2-way
     window explode.  All measures are count/decimal arithmetic."""
-    name = _replay_events_stream(
-        spark, sf_dir, sliding_stateful_rollup, "slideroll"
-    )
-    return spark.sql(
-        f"SELECT win_start, category, order_count, total_revenue,"
-        f" total_quantity FROM {name}"
+    return _replay_events(spark, sf_dir, sliding_stateful_rollup).select(
+        "win_start", "category", "order_count", "total_revenue", "total_quantity"
     )
 
 
@@ -2944,7 +2872,6 @@ def run_arrival_lifecycle(
     index_rows,
     after_epoch=None,
     ledger=None,
-    shuffle_partitions: str = "8",
 ):
     """Shared arrival-lifecycle harness (r14, verdict #5): the epoch
     scaffold that was ~200 near-identical lines in each of
@@ -2963,8 +2890,8 @@ def run_arrival_lifecycle(
     - the batch-id-idempotent quarantine + index commits (an
       at-least-once replay of any epoch is a committed no-op);
     - the shuffle-partition sizing for the ~10-20 small
-      driver-coordinated jobs per run (sized to the replay volume, the
-      ``_replay_events_stream`` convention; restored in the finally).
+      driver-coordinated jobs per run (``REPLAY_PARTITIONS``; restored in
+      the finally).
 
     Injected per modality (each also receives the EPOCH number, for
     kernels that slice a pre-materialized signature memo by epoch):
@@ -2995,7 +2922,7 @@ def run_arrival_lifecycle(
 
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions)
+        spark.conf.set("spark.sql.shuffle.partitions", str(REPLAY_PARTITIONS))
         for bi, i in enumerate(ARRIVAL_ORDER):
             batch = arrivals.filter(epoch_of == i)
             if bi == 0:  # first arrival: the index is empty by definition
@@ -3117,10 +3044,10 @@ def stream_curation_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         accepts = flagged.filter(F.col("passed"))
         em = _epoch_bucket_map(accepts, epoch, ["content_key"])
         # The pre-loop materializations below run ~small shuffles too —
-        # size them to the replay volume like the epoch loop itself (the
-        # _replay_events_stream convention; restored in the finally, and
-        # the harness re-applies it around the loop).
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        # size them to the replay volume like the epoch loop itself
+        # (``REPLAY_PARTITIONS``; restored in the finally, and the harness
+        # re-applies it around the loop).
+        spark.conf.set("spark.sql.shuffle.partitions", str(REPLAY_PARTITIONS))
         # Signatures for every gate-passing doc, from the memoized
         # full-corpus signature table (r15 — per-doc signatures are
         # independent of corpus slicing, so the accepts' rows are a
